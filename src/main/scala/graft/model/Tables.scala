@@ -3,6 +3,8 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SourceOps
+
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md) plus the
   * derived relations of the engine's data model.
   *
@@ -20,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    SourceOps.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -367,19 +369,27 @@ object Tables {
 
   /** Corpus size for the deterministic text-assignment key; an eager tiny
     * aggregate (single-column scan of a dimension table), memoized per sfDir
-    * so repeated query construction doesn't re-run the job. */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  def docCount(s: SparkSession, d: String): Long =
-    docCountCache.computeIfAbsent(d, _ => {
-      val row = documents(s, d).agg(max(col("doc_id"))).head()
-      // fail by name on an empty table: getLong on the NULL max would
-      // throw an opaque unboxing NPE, and the downstream pmod(_, 0)
-      // assignment key is a divide-by-zero shape anyway
-      require(!row.isNullAt(0),
-        s"documents table at $d is empty — no doc_id to key text assignment")
-      row.getLong(0) + 1
-    })
+    * with the documents listing it was computed from, so repeated query
+    * construction doesn't re-run the job and a corpus rewritten at the
+    * same path is counted again. */
+  private val docCountCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (SourceOps.Listing, Long)]()
+  def docCount(s: SparkSession, d: String): Long = {
+    val files = SourceOps.listing(s, s"$d/documents.parquet")
+    docCountCache.get(d) match {
+      case (`files`, n) => n
+      case _ =>
+        val row = documents(s, d).agg(max(col("doc_id"))).head()
+        // fail by name on an empty table: getLong on the NULL max would
+        // throw an opaque unboxing NPE, and the downstream pmod(_, 0)
+        // assignment key is a divide-by-zero shape anyway
+        require(!row.isNullAt(0),
+          s"documents table at $d is empty — no doc_id to key text assignment")
+        val n = row.getLong(0) + 1
+        docCountCache.put(d, (files, n))
+        n
+    }
+  }
 
   /** Conf key for the lineage-cut crossover threshold (bytes of on-disk
     * fact table); see [[beyondCutCrossover]]. */
@@ -391,16 +401,10 @@ object Tables {
   private val DefaultCutCrossoverBytes = 64L * 1024 * 1024
 
   /** On-disk bytes of the fact table (`lineitem.parquet`, file or
-    * directory), memoized per sfDir — one filesystem stat per corpus, not
-    * per query construction. */
-  private val factBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * directory), summed from a fresh listing on every call, so a corpus
+    * resized at the same path is measured again. */
   private[graft] def factBytes(s: SparkSession, d: String): Long =
-    factBytesCache.computeIfAbsent(d, dir => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      java.lang.Long.valueOf(fs.getContentSummary(p).getLength)
-    })
+    SourceOps.listing(s, s"$d/lineitem.parquet").map(_._2).sum
 
   /** The measured lineage-cut crossover policy (round 18,
     * CutCrossoverProbe + BASELINE.md): cutting a shared DIMENSION-BOUNDED

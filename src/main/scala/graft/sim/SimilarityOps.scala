@@ -757,7 +757,7 @@ object SimilarityOps {
   private[graft] def ivfCosinePairs(s: SparkSession, d: String,
       indexDir: Option[String] = None): DataFrame =
     pairsFromAssignments(s, d, indexDir
-      .map(ix => s.read.parquet(s"$ix/assignments"))
+      .map(ix => graft.sources.SourceOps.readParquet(s, s"$ix/assignments"))
       .getOrElse(ivfAssignments(s, d)))
 
   /** Candidate pairs + exact verification from any assignment frame
@@ -1477,7 +1477,7 @@ object SimilarityOps {
     // and reading the artifact is precisely what appendToIvfIndex and
     // searchIvfIndex do, so build/append/search all score against the same
     // bytes by construction
-    val cents = s.read.parquet(s"$indexDir/centroids")
+    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
     val lists = vs.join(assignToNearest(vs, cents), Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("nrm"), col("bucket"))
     graft.sources.SourceOps.writePartitioned(lists, s"$indexDir/lists",
@@ -1500,7 +1500,7 @@ object SimilarityOps {
   def searchIvfIndex(s: SparkSession, indexDir: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     graft.functions.VectorExprs.register(s)
-    val cents = s.read.parquet(s"$indexDir/centroids")
+    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
     val q = queries
       .select(col("vec_id").as("q_id"),
         transform(col("embedding"), x => x.cast("double")).as("qv"))
@@ -1521,7 +1521,7 @@ object SimilarityOps {
       .select(col("q_id"), col("qv"), col("qn"), col("c_label").as("bucket")))
     val probedBuckets = probes.select(col("bucket")).distinct()
       .collect().map(_.get(0)) // bounded: at most |codebook| values
-    val lists = s.read.parquet(s"$indexDir/lists")
+    val lists = graft.sources.SourceOps.readParquet(s, s"$indexDir/lists")
       .filter(col("bucket").isin(probedBuckets.toSeq: _*))
     val wk = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -1557,7 +1557,7 @@ object SimilarityOps {
   def appendToIvfIndex(s: SparkSession, indexDir: String,
       newVectors: DataFrame): Unit = {
     graft.functions.VectorExprs.register(s)
-    val cents = s.read.parquet(s"$indexDir/centroids")
+    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
     val vs = newVectors
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))

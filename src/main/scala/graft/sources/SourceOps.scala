@@ -12,6 +12,62 @@ import graft.model.{Tables, ThemeTree}
   */
 object SourceOps {
 
+  /** A file set's identity: its leaf files as (path, length, modification
+    * time), sorted by path. */
+  private[graft] type Listing = Vector[(String, Long, Long)]
+
+  /** The leaf files under `path`, recursively (`path` itself when it is a
+    * file); empty when the path is absent or cannot be listed. Two equal
+    * listings name the same bytes: Spark writers land every write as
+    * new uniquely-named part files, so an overwrite or append changes the
+    * names, and an in-place rewrite changes the length or modification
+    * time. */
+  private[graft] def listing(spark: SparkSession, path: String): Listing = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      val files = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result().sortBy(_._1)
+    } catch { case _: java.io.IOException => Vector.empty }
+  }
+
+  /** Inferred schemas keyed on (path, the session's `spark.sql.*`
+    * settings), each held with the listing it was inferred from. Settings
+    * such as partition-type inference and `nanosAsLong` change what a
+    * read infers, so they are part of the key. */
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Map[String, String]),
+    (Listing, org.apache.spark.sql.types.StructType)]()
+
+  /** The engine's one parquet read. A plain `spark.read.parquet` runs a
+    * schema-inference job over the files' footers on every call; this
+    * read lists the path's leaf files first and, when the listing and the
+    * session settings match an earlier read, hands Spark that read's
+    * schema, so Spark still lists the files but reads no footer. Any
+    * other case (a changed, missing or empty file set) is the plain read,
+    * so its schema, errors and messages are Spark's own. No Spark job
+    * runs while the memo is locked: readers on other threads (a stream's
+    * `foreachBatch`) may race to fill an entry and the last one wins; a
+    * stale winner costs one later miss, since every hit re-checks the
+    * listing. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val files = listing(spark, path)
+    if (files.isEmpty) return spark.read.parquet(path)
+    val key = (path, spark.conf.getAll.filter(_._1.startsWith("spark.sql.")))
+    schemaMemo.get(key) match {
+      case (`files`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemaMemo.put(key, (files, df.schema))
+        df
+    }
+  }
+
   /** S8: pickle-cache analogue (`report_generator.py:142-187`) — write-once /
     * read-back parquet checkpoint keyed by stage name. */
   def cached(spark: SparkSession, checkpointDir: String, stage: String)
@@ -29,13 +85,13 @@ object SourceOps {
     // rebuilt (mode=overwrite would clear it anyway — the delete just makes
     // the stale state impossible to observe between the branches).
     val committed = committedDir(fs, hPath)
-    if (committed) spark.read.parquet(path)
+    if (committed) readParquet(spark, path)
     else {
       if (fs.exists(hPath)) fs.delete(hPath, true)
       val df = rebuild
       df.write.mode("overwrite").parquet(path)
       markCommitted(fs, hPath)
-      spark.read.parquet(path)
+      readParquet(spark, path)
     }
   }
 
@@ -214,11 +270,13 @@ object SourceOps {
     // served twice. With inference off the partition column round-trips as
     // the exact directory text; downstream readers re-infer as before
     // (parquet partition columns live in directory names, not files).
+    // The previous state is restored exactly, unset included, so the
+    // session's settings (part of readParquet's schema key) read as before.
     val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferPrev = spark.conf.get(inferKey)
+    val inferPrev = spark.conf.getAll.get(inferKey)
     spark.conf.set(inferKey, "false")
     try {
-      val slice0 = spark.read.parquet(dir).filter(predicate)
+      val slice0 = readParquet(spark, dir).filter(predicate)
       val slice = (if (dedupKeys.nonEmpty) {
         val conflicted = slice0
           .groupBy(dedupKeys.map(slice0.col): _*)
@@ -232,7 +290,8 @@ object SourceOps {
         slice0.dropDuplicates(dedupKeys)
       } else slice0).localCheckpoint()
       overwritePartitions(slice, dir, partitionCols)
-    } finally spark.conf.set(inferKey, inferPrev)
+    } finally
+      inferPrev.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _))
   }
 
   /** Sort-clustered layout writer — the THIRD 100 TB layout lever, next to

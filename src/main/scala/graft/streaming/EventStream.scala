@@ -41,7 +41,7 @@ object EventStream {
   def readStream(spark: SparkSession, eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema =
-      try spark.read.parquet(eventsDir).schema
+      try graft.sources.SourceOps.readParquet(spark, eventsDir).schema
       catch { case _: org.apache.spark.sql.AnalysisException => fallbackSchema }
     graft.model.Tables.normalizeEventTs(
       spark.readStream.schema(schema).parquet(eventsDir))

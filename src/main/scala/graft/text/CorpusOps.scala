@@ -825,7 +825,7 @@ object CorpusOps {
     * never drift in how they derive it. */
   private[graft] def evalGrams(s: SparkSession,
       evalPath: String = EvalSetPath): DataFrame =
-    s.read.parquet(evalPath)
+    graft.sources.SourceOps.readParquet(s, evalPath)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= DecontamGramExt)
       .select(explode(gramCol(col("w"), DecontamGramExt)).as("gram"))

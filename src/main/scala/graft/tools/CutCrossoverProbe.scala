@@ -70,8 +70,10 @@ object CutCrossoverProbe {
         val (uncut, cut) = (1 to rounds).map { _ =>
           (run(cut = false), run(cut = true))
         }.unzip
-        val eq = uncut.head._2.map(_.toString).sorted
-          .sameElements(cut.head._2.map(_.toString).sorted)
+        def sorted(rows: Array[org.apache.spark.sql.Row]) =
+          rows.map(_.toString).sorted
+        val expected = sorted(uncut.head._2)
+        val eq = (uncut ++ cut).forall(r => sorted(r._2).sameElements(expected))
         if (!eq) anyMismatch = true
         def fmt(ts: Seq[(Double, Array[org.apache.spark.sql.Row])]) =
           ts.map(t => f"${t._1}%.3f").mkString(",")

@@ -54,7 +54,9 @@ class CutCrossoverSpec extends AnyFunSuite with BeforeAndAfterAll {
       mk: (SparkSession, String, Boolean) => org.apache.spark.sql.DataFrame)
       : Unit = test(s"$name: cut and uncut arms are row-identical") {
     val uncut = mk(spark, sf, false).collect().map(_.toString).sorted
-    val cut = mk(spark, sf, true).collect().map(_.toString).sorted
+    val cut =
+      try mk(spark, sf, true).collect().map(_.toString).sorted
+      finally PlanProbe.releaseCuts()
     assert(uncut.sameElements(cut), s"$name cut arm diverged from uncut")
   }
 
