@@ -24,82 +24,62 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Headline queries: one representative per operator family (full coverage
-    * is Verify's job; benching all ~60 registered queries would measure
-    * harness overhead, not the engine). */
-  val headline: Seq[String] = Seq(
-    "q1_agg",                  // grouped aggregate on the raw fact table
-    "q_counts_sector_company", // chunk-row star join + groupBy
-    "q_pivot_scores",          // label + pivot matrix
-    "q_basket",                // multi-join basket assembly
-    "q_topk_per_group",        // window top-k
-    "q_dedup_exact",           // hash-aggregate dedup
-    "q_zscore_series",         // window z-score time series
-    "q_scaffold_month_entity", // dense scaffold cross join
-    "q_comention_edges",       // graph self-join
-    "q_query_algebra",         // composed predicate scan
-    "q_minhash_lsh",           // sketch + band join dedup
-    "q_embed_cosine_topk",     // ANN brute-force baseline
-    "q_sessionize",            // gap session windows
-    "q_hierarchical_summary")  // partial/final summarize shape
+  /** The frozen sets in run order, each keyed by its JSON key. `queries` is
+    * the headline: one representative per operator family (full coverage is
+    * Verify's job; benching all ~60 registered queries would measure harness
+    * overhead, not the engine), and the only set summed into `total`. Every
+    * later set is a showcase block timed with the same interleaved protocol
+    * and its own calibration samples, run after the sets before it so their
+    * numbers stay round-over-round comparable; the `_rNN` suffix is the
+    * round a set's operators were first benched (BASELINE.md). */
+  val sets: Seq[(String, Seq[String])] = Seq(
+    "queries" -> Seq(
+      "q1_agg",                  // grouped aggregate on the raw fact table
+      "q_counts_sector_company", // chunk-row star join + groupBy
+      "q_pivot_scores",          // label + pivot matrix
+      "q_basket",                // multi-join basket assembly
+      "q_topk_per_group",        // window top-k
+      "q_dedup_exact",           // hash-aggregate dedup
+      "q_zscore_series",         // window z-score time series
+      "q_scaffold_month_entity", // dense scaffold cross join
+      "q_comention_edges",       // graph self-join
+      "q_query_algebra",         // composed predicate scan
+      "q_minhash_lsh",           // sketch + band join dedup
+      "q_embed_cosine_topk",     // ANN brute-force baseline
+      "q_sessionize",            // gap session windows
+      "q_hierarchical_summary"), // partial/final summarize shape
+    "extras" -> Seq(
+      "q_asof_plan",         // custom Catalyst sorted-merge as-of join
+      "q_asof_join",         // composed union+window as-of route (same oracle)
+      "q_embed_ivf_search",  // probe → bucket-scan → top-k ANN path
+      "q_ngram_jaccard",     // df-capped shingle self-join
+      "q_simhash",           // 60-bit banded fingerprint dedup
+      "q_dup_clusters",      // LSH candidates + iterative connected components
+      "q_cc_chain",          // CC in the high-diameter multi-round regime
+      "q_corpus_pipeline"),  // composed gate→cluster-keep-one→scrub→split chain
+    "extras_r10" -> Seq(
+      "q_chunk_split",       // fixed-window chunker (map-only explode)
+      "q_entity_batching",   // Q8 one-scan fan-out + broadcast batch dim
+      "q_wrap_truncate",     // P8 wrap UDF + codegen truncation window
+      "q_embed_neardup_ivf"), // hierarchical 8-table OR-amplified IVF near-dup
+    "extras_r13" -> Seq(
+      "q_report_pipeline"),  // §3.3 composed search→label→score→coalesce chain
+    "extras_r14" -> Seq(
+      "q_market_pipeline",   // §3.1 search→dedup→mask→label→basket→panel chain
+      "q_screener_pipeline"), // §3.2 tree→search→label→score-matrix chain
+    "extras_r15" -> Seq(
+      "q_narrative_pipeline", // cross-source pivot→z→smooth→align→peaks chain
+      "q_election_pipeline",  // topics explode→scaffold→bipartite-degree chain
+      "q_board_pipeline",     // search modes→first-wins dedup→quarterly chain
+      "q_network_pipeline"))  // §3.1 graph arm: roles→co-mention→layout chain
 
-  /** Showcase operators timed with the same interleaved protocol but
-    * reported under `extras` and EXCLUDED from `total`, which must stay
-    * round-over-round comparable on the fixed headline set. */
-  val extraHeadline: Seq[String] = Seq(
-    "q_asof_plan",         // custom Catalyst sorted-merge as-of join
-    "q_asof_join",         // composed union+window as-of route (same oracle)
-    "q_embed_ivf_search",  // probe → bucket-scan → top-k ANN path
-    "q_ngram_jaccard",     // df-capped shingle self-join
-    "q_simhash",           // 60-bit banded fingerprint dedup
-    "q_dup_clusters",      // LSH candidates + iterative connected components
-    "q_cc_chain",          // CC in the high-diameter multi-round regime
-    "q_corpus_pipeline")   // composed gate→cluster-keep-one→scrub→split chain
-
-  /** Operators born in round 9, first benched round 10 — their OWN frozen
-    * set (`extras_r10` in the JSON, own calibration samples) so they gain
-    * round-over-round drift tracking without contaminating the older
-    * comparable `headline`/`extras` sets (BASELINE.md documents the birth
-    * round). */
-  val extraR10: Seq[String] = Seq(
-    "q_chunk_split",       // fixed-window chunker (map-only explode)
-    "q_entity_batching",   // Q8 one-scan fan-out + broadcast batch dim
-    "q_wrap_truncate",     // P8 wrap UDF + codegen truncation window
-    "q_embed_neardup_ivf") // hierarchical 8-table OR-amplified IVF near-dup
-
-  /** Operators born in round 13 — same frozen-set protocol as
-    * [[extraR10]] (`extras_r13` in the JSON, own calibration samples). */
-  val extraR13: Seq[String] = Seq(
-    "q_report_pipeline")   // §3.3 composed search→label→score→coalesce chain
-
-  /** Composed lifecycles born in round 14 — same frozen-set protocol
-    * (`extras_r14` in the JSON, own calibration samples, run after the
-    * older sets so those stay round-over-round comparable). */
-  val extraR14: Seq[String] = Seq(
-    "q_market_pipeline",   // §3.1 search→dedup→mask→label→basket→panel chain
-    "q_screener_pipeline") // §3.2 tree→search→label→score-matrix chain
-
-  /** Composed lifecycles born in round 15 — same frozen-set protocol
-    * (`extras_r15` in the JSON, own calibration samples, run LAST). */
-  val extraR15: Seq[String] = Seq(
-    "q_narrative_pipeline", // cross-source pivot→z→smooth→align→peaks chain
-    "q_election_pipeline",  // topics explode→scaffold→bipartite-degree chain
-    "q_board_pipeline",     // search modes→first-wins dedup→quarterly chain
-    "q_network_pipeline")   // §3.1 graph arm: roles→co-mention→layout chain
+  /** A set's calibration key in the full record. */
+  private def calibrationKey(set: String): String =
+    if (set == "queries") "calibration" else s"calibration_$set"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(overrides = Session.registryConf)
     def once(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -123,27 +103,20 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val qs0 = SparkEntry.queries
-    val present = headline.filter(qs0.contains)
-    val extras = extraHeadline.filter(qs0.contains)
-    val extras10 = extraR10.filter(qs0.contains)
-    val extras13 = extraR13.filter(qs0.contains)
-    val extras14 = extraR14.filter(qs0.contains)
-    val extras15 = extraR15.filter(qs0.contains)
+    // a registry-subset run filters each set down to its registered queries
+    val present: Seq[(String, Seq[String])] =
+      sets.map { case (k, names) => k -> names.filter(qs0.contains) }
     val passes = 3
     // times(name) accumulates one entry per pass; -1 marks a failed rep
     val times = scala.collection.mutable.Map(
-      (present ++ extras ++ extras10 ++ extras13 ++ extras14 ++ extras15)
-        .map(_ -> List.empty[Double]): _*)
+      present.flatMap(_._2).map(_ -> List.empty[Double]): _*)
     // headline passes run FIRST and alone — extras must not perturb the
     // page-cache/GC conditions of headline reps 2-3, or `total` stops being
-    // comparable to rounds benched before extras existed; each later block
+    // comparable to rounds benched before extras existed; each later set
     // repeats the same interleaved protocol (with its own calibration
-    // samples) after the previous block completes
-    // one frozen set's interleaved passes; an EMPTY set (a registry-subset
-    // run that filtered it away) skips its calibration samples entirely —
-    // three constant-work probes guarding zero queries are pure overhead
-    // that grows with every new frozen set — and emits an empty
-    // calibration list in the JSON
+    // samples) after the previous set completes. An EMPTY set skips its
+    // calibration samples: probes guarding zero queries are pure overhead,
+    // and the JSON gets an empty calibration list.
     def runBlock(names: Seq[String]): Seq[Double] =
       if (names.isEmpty) Seq.empty
       else (1 to passes).map { _ =>
@@ -151,54 +124,34 @@ object Bench {
         names.foreach { name => times(name) :+= once(name, qs0(name)) }
         c
       }
-    val calib = runBlock(present)
-    val calibExtras = runBlock(extras)
-    val calibExtras10 = runBlock(extras10)
-    val calibExtras13 = runBlock(extras13)
-    val calibExtras14 = runBlock(extras14)
-    val calibExtras15 = runBlock(extras15)
+    // (set key, its queries, its calibration samples), in run order
+    val blocks: Seq[(String, Seq[String], Seq[Double])] =
+      present.map { case (k, names) => (k, names, runBlock(names)) }
     def minOf(name: String): Double = {
       val ok = times(name).filter(_ >= 0)
       if (ok.isEmpty) -1.0 else ok.min
     }
-    val results = present.map(name => name -> minOf(name))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val extrasJson = extras.map(name => "\"" + name + "\":" + minOf(name))
-      .mkString("{", ",", "}")
-    val extras10Json = extras10.map(name => "\"" + name + "\":" + minOf(name))
-      .mkString("{", ",", "}")
-    val extras13Json = extras13.map(name => "\"" + name + "\":" + minOf(name))
-      .mkString("{", ",", "}")
-    val extras14Json = extras14.map(name => "\"" + name + "\":" + minOf(name))
-      .mkString("{", ",", "}")
-    val extras15Json = extras15.map(name => "\"" + name + "\":" + minOf(name))
-      .mkString("{", ",", "}")
-    // extras participate in failure gating exactly like headline queries —
+    def kv(k: String, v: String): String = "\"" + k + "\":" + v
+    // Locale.ROOT: the f-interpolator is locale-sensitive and would emit
+    // comma decimals (broken JSON) on comma-decimal default locales
+    def fmt3(x: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+    val setsJson = blocks.map { case (k, names, _) =>
+      kv(k, names.map(n => kv(n, minOf(n).toString)).mkString("{", ",", "}"))
+    }.mkString(",")
+    // every set participates in failure gating exactly like the headline —
     // a broken or unregistered showcase operator must not exit 0. The rep
     // gate is ANY failed rep, not all-reps-failed: a query that succeeds
     // on pass 1 and OOMs on passes 2-3 still has a valid best-of (minOf
     // ≥ 0), and gating on minOf alone would ship the intermittent crash
     // with failures:[] and exit 0
-    val failed =
-      (headline ++ extraHeadline ++ extraR10 ++ extraR13 ++ extraR14 ++
-        extraR15)
-        .filterNot(qs0.contains) ++
-      (present ++ extras ++ extras10 ++ extras13 ++ extras14 ++ extras15)
-        .filter(n => times(n).exists(_ < 0))
+    val failed = sets.flatMap(_._2).filterNot(qs0.contains) ++
+      present.flatMap(_._2).filter(n => times(n).exists(_ < 0))
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Locale.ROOT: the f-interpolator is locale-sensitive and would emit
-    // comma decimals (broken JSON) on comma-decimal default locales
-    def fmtCalib(cs: Seq[Double]): String = cs
-      .map(c => String.format(java.util.Locale.ROOT, "%.3f", Double.box(c)))
-      .mkString("[", ",", "]")
-    val calibJson = fmtCalib(calib)
-    val calibExtrasJson = fmtCalib(calibExtras)
-    val calibExtras10Json = fmtCalib(calibExtras10)
-    val calibExtras13Json = fmtCalib(calibExtras13)
-    val calibExtras14Json = fmtCalib(calibExtras14)
-    val calibExtras15Json = fmtCalib(calibExtras15)
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val calibJson = blocks.map { case (k, _, cs) =>
+      kv(calibrationKey(k), cs.map(fmt3).mkString("[", ",", "]"))
+    }.mkString(",")
+    val total = blocks.head._2.map(minOf).filter(_ >= 0).sum
 
     // ---- machine-readable drift verdicts --------------------------------
     // Automates the adjudication BASELINE.md prescribes in prose: compare
@@ -235,11 +188,7 @@ object Bench {
     // record it is compared against — environmentVerdict's one boundary
     // run is a comparability blip, not environment drift (recorded in
     // BASELINE.md round 16; the two-consecutive-runs rule absorbs it).
-    val blocks: Seq[(Seq[String], Seq[Double])] =
-      Seq(present -> calib, extras -> calibExtras,
-        extras10 -> calibExtras10, extras13 -> calibExtras13,
-        extras14 -> calibExtras14, extras15 -> calibExtras15)
-    val runRatio = BenchDrift.runRatio(blocks.flatMap { case (names, cs) =>
+    val runRatio = BenchDrift.runRatio(blocks.flatMap { case (_, names, cs) =>
       names.flatMap(n => BenchDrift.cleanBestRatio(steady.get(n), times(n), cs))
     })
     // Adjudication rules live in BenchDrift (unit-tested by
@@ -248,31 +197,19 @@ object Bench {
     def driftOf(name: String, cs: Seq[Double]): (String, String) = {
       val ts = times(name)
       val status = BenchDrift.status(steady.get(name), ts, cs, runRatio)
-      val st = steady.getOrElse(name, -1.0)
-      val samples = ts.map(t =>
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(t)))
-        .mkString("[", ",", "]")
-      val stStr =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(st))
-      (status,
-        "\"" + name + "\":{\"steady\":" + stStr + ",\"best\":" +
-          String.format(java.util.Locale.ROOT, "%.3f",
-            Double.box(minOf(name))) +
-          ",\"samples\":" + samples + ",\"status\":\"" + status + "\"}")
+      (status, kv(name, "{" + kv("steady", fmt3(steady.getOrElse(name, -1.0))) +
+        "," + kv("best", fmt3(minOf(name))) +
+        "," + kv("samples", ts.map(fmt3).mkString("[", ",", "]")) +
+        ",\"status\":\"" + status + "\"}"))
     }
-    val drift: Seq[(String, (String, String))] =
-      present.map(n => n -> driftOf(n, calib)) ++
-        extras.map(n => n -> driftOf(n, calibExtras)) ++
-        extras10.map(n => n -> driftOf(n, calibExtras10)) ++
-        extras13.map(n => n -> driftOf(n, calibExtras13)) ++
-        extras14.map(n => n -> driftOf(n, calibExtras14)) ++
-        extras15.map(n => n -> driftOf(n, calibExtras15))
+    val drift: Seq[(String, (String, String))] = blocks.flatMap {
+      case (_, names, cs) => names.map(n => n -> driftOf(n, cs))
+    }
     val driftJson = drift.map(_._2._2).mkString("{", ",", "}")
     val structural = drift.collect { case (n, ("structural", _)) => n }
     val structuralJson = structural.map("\"" + _ + "\"").mkString("[", ",", "]")
     val baselineTag = if (steady.isEmpty) "missing" else baselinePath
-    val runRatioStr =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(runRatio))
+    val runRatioStr = fmt3(runRatio)
 
     // Persistent-contention escalation: the record file carries the LAST
     // run's run_ratio, so two consecutive contended runs (>1.5) become an
@@ -291,7 +228,7 @@ object Bench {
     } catch { case _: Throwable => None }
     val envVerdict = BenchDrift.environmentVerdict(prevRatio, runRatio)
 
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"extras":$extrasJson,"extras_r10":$extras10Json,"extras_r13":$extras13Json,"extras_r14":$extras14Json,"extras_r15":$extras15Json,"failures":$failedJson,"passes":$passes,"calibration":$calibJson,"calibration_extras":$calibExtrasJson,"calibration_extras_r10":$calibExtras10Json,"calibration_extras_r13":$calibExtras13Json,"calibration_extras_r14":$calibExtras14Json,"calibration_extras_r15":$calibExtras15Json,"drift":$driftJson,"drift_structural":$structuralJson,"run_ratio":$runRatioStr,"environment":"$envVerdict","boot_id":"$bootId","drift_baseline":"$baselineTag","sf":"$sfDir"}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec",$setsJson,"failures":$failedJson,"passes":$passes,$calibJson,"drift":$driftJson,"drift_structural":$structuralJson,"run_ratio":$runRatioStr,"environment":"$envVerdict","boot_id":"$bootId","drift_baseline":"$baselineTag","sf":"$sfDir"}"""
     // Persist the full record: the driver's tail capture keeps only the
     // compact trailing line, so per-query history would otherwise live
     // only in prose. A write failure (read-only checkout, container FS)
@@ -307,20 +244,14 @@ object Bench {
     // did, leaving the round's total unrecoverable from the capture). A
     // compact trailing summary guarantees any tail capture ends with a
     // parseable record carrying the headline total.
-    val totalCompact = String.format(
-      java.util.Locale.ROOT, "%.3f", Double.box(total))
-    // The compact line now ALSO carries every timed query's best-of-3
-    // (headline + all frozen extras sets, 3 decimals), so the tail capture
-    // alone satisfies the driver contract {"metric","value","unit",
-    // "queries","sf"} — the full record's per-set breakdown above is
-    // unchanged, and `value` stays the headline-set total for
-    // round-over-round comparability. (~1.4 kB, still inside a 2000-char
-    // tail as the final line.)
-    val allQsJson =
-      (present ++ extras ++ extras10 ++ extras13 ++ extras14 ++ extras15)
-        .map(n => "\"" + n + "\":" + String.format(
-          java.util.Locale.ROOT, "%.3f", Double.box(minOf(n))))
-        .mkString("{", ",", "}")
+    // The compact line also carries every timed query's best-of-3 (all
+    // sets, 3 decimals), so the tail capture alone satisfies the stdout
+    // contract {"metric","value","unit","queries","sf"}; `value` stays the
+    // headline-set total for round-over-round comparability. (~1.4 kB,
+    // still inside a 2000-char tail as the final line.)
+    val totalCompact = fmt3(total)
+    val allQsJson = present.flatMap(_._2).map(n => kv(n, fmt3(minOf(n))))
+      .mkString("{", ",", "}")
     println(s"""{"metric":"total_compact","value":$totalCompact,"unit":"sec","queries":$allQsJson,"failures":$failedJson,"drift_structural":$structuralJson,"run_ratio":$runRatioStr,"environment":"$envVerdict","sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: SparkEntry.entry must return >0 rows on
   * sf0.001. Prints the row count and the first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows = $n")

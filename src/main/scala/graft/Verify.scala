@@ -55,23 +55,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // cluster-profile runs (`--conf spark.graft.cutPolicy=reliable`) need a
-    // checkpoint dir; default one into /tmp on the local gate box so the
-    // whole oracle sweep can run under durable cuts
-    if (spark.conf.get(PlanProbe.PolicyKey, "local") == "reliable" &&
-        spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        Files.createTempDirectory("graft_ck_verify").toString)
+    val spark = Session(overrides = Session.registryConf)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       dumpQuery(spark, sfDir, outDir, name, fn)

@@ -376,8 +376,8 @@ object Baskets {
   /** U3: anti-membership — companies active overall but absent in the final
     * month (`tool.py:720-724` missing-companies scaffold step). */
   /** q_anti_membership frame with the distinct-grain cut A/B knob (round
-    * 18, VERDICT item 4); values identical either way — CutCrossoverProbe
-    * pins row equality and measures the crossover per operating point. */
+    * 18, VERDICT item 4); values identical either way — CutProbe
+    * q_anti_membership pins row equality and measures the crossover per operating point. */
   private[graft] def antiMembershipFrame(s: SparkSession, d: String,
       cut: Boolean): DataFrame = {
       // r17: all three frames (max month, last-month presence, overall
@@ -400,7 +400,7 @@ object Baskets {
   private val qAnti = Q(
     "q_anti_membership",
     // size-gated cut (r18): sf0.1 wash, 7.39 → 6.03 s at ×10
-    // (CutCrossoverProbe; see Tables.beyondCutCrossover)
+    // (CutProbe q_anti_membership; see Tables.beyondCutCrossover)
     (s, d) => antiMembershipFrame(s, d, cut = Tables.beyondCutCrossover(s, d)),
     Some(
       s"""WITH ${Oracle.chunkCte},

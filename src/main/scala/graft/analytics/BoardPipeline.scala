@@ -64,7 +64,7 @@ object BoardPipeline {
     * counts aggregate — a DIMENSION-BOUNDED frame (≤ |quarters|·3 rows) —
     * so the zero-fill join and the quarter axis read the materialization
     * instead of each re-executing the pruned corpus aggregate. Values
-    * identical either way; CutCrossoverProbe pins row equality and
+    * identical either way; CutProbe q_board_pipeline pins row equality and
     * measures the crossover per operating point. */
   private[graft] def pipelineFrame(s: SparkSession, d: String,
       cut: Boolean): org.apache.spark.sql.DataFrame = {
@@ -159,7 +159,7 @@ object BoardPipeline {
     "q_board_pipeline",
     // size-gated cut (r18): uncut at gate scale (r17 measured 3.43 s vs
     // 5.09 s cut; this round's sf0.1 probe is a wash), cut beyond the
-    // measured ×10 crossover (15.1 → 10.7 s at ×10; CutCrossoverProbe,
+    // measured ×10 crossover (15.1 → 10.7 s at ×10; CutProbe,
     // Tables.beyondCutCrossover).
     (s, d) => pipelineFrame(s, d, cut = Tables.beyondCutCrossover(s, d)),
     Some {

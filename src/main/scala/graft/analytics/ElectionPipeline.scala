@@ -81,10 +81,11 @@ object ElectionPipeline {
     * projected kept slice (a label-filtered fraction of the corpus, NOT
     * dimension-bounded — but narrow: no text, no span arrays). Values are
     * identical either way (the daily arm's columns are the same
-    * projections in both relations; ElectionCutProbe pins row equality).
+    * projections in both relations; CutProbe q_election_pipeline pins row
+    * equality).
     * The shape is a measured CROSSOVER: r15 measured a FULL-WIDTH cut at
     * 10 s vs 4.9 s two-pass and rejected it; r16's projected cut wins at
-    * sf0.1 (ElectionCutProbe interleaved: 8.5-10.5 s vs 10.0-11.3 s), is
+    * sf0.1 (CutProbe q_election_pipeline: 8.5-10.5 s vs 10.0-11.3 s), is
     * noise-dominated at ×10/×25, and loses 1.5× at the ×50 blowup
     * (PipelineScaleStress A/B: 58.7 s vs 39.2 s — the cut materializes a
     * constant fraction of the corpus, which overtakes the saved pruned
@@ -233,7 +234,7 @@ object ElectionPipeline {
     "q_election_pipeline",
     // two-pass shape: the winning side of a MEASURED CROSSOVER (round 16,
     // BASELINE.md). The projected one-scan cut wins consistently at sf0.1
-    // (ElectionCutProbe interleaved: 8.5-10.5 s vs 10.0-11.3 s), is
+    // (CutProbe q_election_pipeline: 8.5-10.5 s vs 10.0-11.3 s), is
     // noise-dominated at the ×10/×25 blowups, and LOSES decisively at
     // ×50 (PipelineScaleStress: 58.7 s vs 39.2 s) — the cut's
     // corpus-fraction materialization overtakes the saved column-pruned

@@ -67,7 +67,7 @@ import graft.label.Labeler
   * ReusedExchange would dedup the pivot across its consumers was refuted
   * by an executed-plan dump at ×10 (seven distinct lineitem⋈orders
   * SortMergeJoins in one action; only scan-side exchanges reuse), and the
-  * cut measured 2.5× faster there (`tools/NarrativeCutProbe`, BASELINE.md
+  * cut measured 2.5× faster there (`tools/CutProbe q_narrative_pipeline`, BASELINE.md
   * round 17). Windows, scaffolds, peak sets, and the lag cross join are
   * all driver-negligible with broadcast merges. Nothing shuffles the
   * corpus but the one groupBy — now enforced by the cut rather than

@@ -187,8 +187,8 @@ object TimeSeriesOps {
     * aggregate — a DIMENSION-BOUNDED frame — so its three consumers read
     * the materialization instead of each re-executing the pruned corpus
     * pass. Values identical either way (the cut is a materialization
-    * boundary, not a semantic change); CutCrossoverProbe pins row equality
-    * and measures the crossover per operating point. */
+    * boundary, not a semantic change); CutProbe q_scaffold_month_entity pins
+    * row equality and measures the crossover per operating point. */
   private[graft] def scaffoldFrame(s: SparkSession, d: String,
       cut: Boolean): DataFrame = {
       // r17 (same values, same oracle): the month axis and the entity set
@@ -229,7 +229,7 @@ object TimeSeriesOps {
     // size-gated cut (r18): uncut at gate scale (the r17 measurement —
     // 1.33 s vs 2.29 s cut — and this round's sf0.1 wash), cut beyond the
     // measured ×10 crossover (3.60 → 2.73 s at ×10, 6.44 → 3.85 s at ×25;
-    // CutCrossoverProbe, Tables.beyondCutCrossover).
+    // CutProbe q_scaffold_month_entity, Tables.beyondCutCrossover).
     (s, d) => scaffoldFrame(s, d, cut = Tables.beyondCutCrossover(s, d)),
     Some(
       s"""WITH ${Oracle.chunkCte},

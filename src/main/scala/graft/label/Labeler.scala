@@ -380,6 +380,34 @@ object Labeler {
     }
   }
 
+  /** Row-by-row agreement of two labelings of the same chunk rows, as one
+    * row (n_rows, n_mismatch). Rows pair 1:1 on the chunk key plus a per-key
+    * row number: the key is not unique when the generator emits a
+    * full-duplicate lineitem row (sf0.001 has one such pair), and pairing
+    * among full duplicates is arbitrary and harmless since identical rows
+    * carry identical text. The join is FULL OUTER, so a row only one side
+    * has (a batched-path fanout or drop) counts in n_rows and as a mismatch
+    * instead of vanishing. */
+  private[graft] def compareLabels(viaExpr: DataFrame,
+      viaBatch: DataFrame): DataFrame = {
+    val key = Seq("sentence_id", "entity_id", "part_entity_id")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key.map(col): _*).orderBy(col("sentence_id"))
+    def side(df: DataFrame, prefix: String) =
+      df.select(key.map(col) ++ Seq(col("label").as(prefix + "label"),
+          col("motivation").as(prefix + "motivation")): _*)
+        .withColumn("__rn", row_number().over(w))
+    side(viaExpr, "").join(side(viaBatch, "b_"), key :+ "__rn", "full_outer")
+      .agg(count(lit(1)).as("n_rows"),
+        // null-SAFE comparison: a merge-back miss or a one-sided row leaves
+        // a NULL, and `label =!= NULL` is NULL — when(NULL) would count it
+        // as a MATCH
+        sum(when(!(col("label") <=> col("b_label"))
+          || !(col("motivation") <=> col("b_motivation")), 1L)
+          .otherwise(0L))
+          .as("n_mismatch"))
+  }
+
   /** Driver gate for the batched-prompt path: batch → JSON response → parse →
     * merge-back must agree with the whole-stage-codegen stub expression on
     * every chunk row. Oracle pins n_rows to the chunk count, mismatches to 0. */
@@ -388,40 +416,8 @@ object Labeler {
     (s, d) => {
       // reads keys + text only — header/name dims eliminated by RI
       val base = graft.model.Tables.chunkRowsPruned(s, d, withText = true)
-      // r18 correctness fix (INHERITED, pre-existing at sf0.001 since the
-      // query's birth; invisible to the sf0.01 gate): (sentence_id,
-      // entity_id, part_entity_id) is NOT unique when the generator emits
-      // a full-duplicate lineitem row (sf0.001 has exactly one such pair),
-      // so the key join paired duplicates 2×2 and n_rows read 6002 vs the
-      // oracle's count(*) = 6000. A per-side row_number over the key pairs
-      // duplicates 1:1 — n_rows is exactly the row count again. Pairing
-      // among full duplicates is arbitrary AND harmless: identical rows
-      // carry identical text, so both paths label them identically and
-      // n_mismatch is unaffected. At every SF where the key IS unique the
-      // window assigns rn=1 everywhere and the result is bit-identical to
-      // the old shape; the oracle is untouched.
-      val key = Seq("sentence_id", "entity_id", "part_entity_id")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key.map(col): _*).orderBy(col("sentence_id"))
-      val viaBatch = labelBatchedPrompt(base, StubBatchedClassifier)
-        .select(col("sentence_id"), col("entity_id"), col("part_entity_id"),
-          col("label").as("b_label"), col("motivation").as("b_motivation"))
-        .withColumn("__rn", row_number().over(w))
-      val viaExpr = withStubLabels(base)
-        .select(col("sentence_id"), col("entity_id"), col("part_entity_id"),
-          col("label"), col("motivation"))
-        .withColumn("__rn", row_number().over(w))
-      viaExpr.join(viaBatch,
-        key :+ "__rn")
-        .agg(count(lit(1)).as("n_rows"),
-          // null-SAFE comparison: a merge-back miss leaves b_label NULL,
-          // and `label =!= NULL` is NULL — when(NULL) would count it as a
-          // MATCH, letting a batched path that attaches no labels at all
-          // sail through the gate
-          sum(when(!(col("label") <=> col("b_label"))
-            || !(col("motivation") <=> col("b_motivation")), 1L)
-            .otherwise(0L))
-            .as("n_mismatch"))
+      compareLabels(withStubLabels(base),
+        labelBatchedPrompt(base, StubBatchedClassifier))
     },
     Some(
       """SELECT (SELECT count(*) FROM lineitem) AS n_rows,

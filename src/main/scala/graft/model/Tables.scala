@@ -407,7 +407,7 @@ object Tables {
     SourceOps.listing(s, s"$d/lineitem.parquet").map(_._2).sum
 
   /** The measured lineage-cut crossover policy (round 18,
-    * CutCrossoverProbe + BASELINE.md): cutting a shared DIMENSION-BOUNDED
+    * CutProbe + BASELINE.md): cutting a shared DIMENSION-BOUNDED
     * frame (scaffold/exposure/board counts, semi/anti membership grains)
     * is a wash or a small loss at gate scale — the checkpoint's fixed job
     * cost rivals re-running 1-2 PRUNED corpus passes — and wins 1.2-1.5×
@@ -418,7 +418,7 @@ object Tables {
     * the sf0.1 bench round-over-round comparable), above it the consumer
     * wraps the frame in [[graft.PlanProbe.cut]]. Values are identical
     * either way — the cut is a materialization boundary, not a semantic
-    * change (CutCrossoverProbe pins row equality at every operating
+    * change (CutProbe pins row equality at every operating
     * point) — so the policy can be size-adaptive without touching any
     * oracle. Unlike election's REJECTED corpus-fraction cut, every frame
     * under this policy is dimension-bounded, so the materialization

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** As-of join as a first-class Catalyst operator: custom `LogicalPlan` →
-  * `SparkStrategy` → `SparkPlan`, registered via `SparkSessionExtensions`
+  * `SparkStrategy` → `SparkPlan`, installed by `AsOfJoinOps.ensureRegistered`
   * (route (c) of the custom-operator preference order — the composed
   * union+window formulation lives in `graft.analytics.AsOf` as route (a)).
   *
@@ -153,19 +153,11 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     copy(left = newChildren(0), right = newChildren(1))
 }
 
-/** `SparkSessionExtensions` hook: enable with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * `builder.withExtensions(new GraftExtensions)`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-}
-
 /** Column-level API over the custom operator. */
 object AsOfJoinOps {
 
-  /** Make the strategy available on an already-built session (idempotent);
-    * sessions built with [[GraftExtensions]] don't need this. */
+  /** Install the strategy on a session (idempotent): the one install point,
+    * called by every as-of query, so any session, however built, plans it. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val exp = spark.experimental
     if (!exp.extraStrategies.contains(AsOfJoinStrategy))

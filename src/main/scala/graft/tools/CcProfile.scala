@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler for the connected-components loop in the high-diameter
   * regime: runs `chainClustersWithRounds` once at SPARK_GRAFT_SF_DIR and
   * prints loop/materialize wall times and the round count (set
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
 object CcProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val t0 = System.nanoTime()
     val (df, rounds) = graft.text.CorpusOps.chainClustersWithRounds(spark, sfDir)
     val t1 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev helper: dump a SUBSET of SparkEntry.queries (args(2..)) to parquet +
@@ -19,15 +17,7 @@ object CheckOne {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(overrides = graft.Session.registryConf)
     new java.io.File(outDir).mkdirs()
     val qs = SparkEntry.queries
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Block-store leak audit for the checkpoint lifecycle under REPEATED
   * invocation: the connected-components loop localCheckpoints every round
   * and frees superseded cuts as it goes (`GraftShims.freeCheckpoint`), and
@@ -26,16 +24,8 @@ object CheckpointAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val qs = graft.SparkEntry.queries
 
     // freeCheckpoint unpersists non-blocking; poll until the census stops

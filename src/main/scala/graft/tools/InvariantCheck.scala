@@ -90,22 +90,7 @@ object InvariantCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // cluster-profile runs (`--conf spark.graft.cutPolicy=reliable`) need a
-    // checkpoint dir; on the local gate box default one into /tmp so the
-    // full 20-invariant sweep can be exercised under reliable cuts — on a
-    // real cluster, set an HDFS dir explicitly instead
-    if (spark.conf.get(graft.PlanProbe.PolicyKey, "local") == "reliable" &&
-        spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ck_gate").toString)
+    val spark = graft.Session()
     val qs = graft.SparkEntry.queries
     val tableFailures = invariants.flatMap { case (name, column, ok, desc) =>
       try {

@@ -356,14 +356,7 @@ object PipelineScaleStress {
     val skewPct = args.lift(3).map(_.toInt).getOrElse(0)
     val outDir = givenOut.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipe_stress").toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val allFailures =
       try {
@@ -427,7 +420,7 @@ object PipelineScaleStress {
 
     val armFailures = auditSearchArms(spark, outDir, s"×$factor")
 
-    // S8 shape A/B (recorded, not gated on time — ElectionCutProbe owns
+    // S8 shape A/B (recorded, not gated on time — CutProbe owns
     // the interleaved decision measurement): time BOTH pipelineFrame
     // shapes explicitly, whatever the registered default is, and PIN their
     // row equality at the blowup — the knob must never change values

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: IVF pair recall vs the brute-force ground truth at one or
   * more data dirs — the fast inner loop for quantizer tuning.
   * InvariantCheck owns the release gate (same computation plus the shape
@@ -15,14 +13,7 @@ object RecallProbe {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(overrides = graft.Session.registryConf)
     dirs.foreach { d =>
       // same computation as the release gate, by construction
       val (nHit, nBf) = InvariantCheck.ivfRecallCounts(spark, d)

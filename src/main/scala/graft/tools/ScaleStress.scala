@@ -68,14 +68,7 @@ object ScaleStress {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_scale_stress").toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     blowUp(spark, srcDir, outDir, factor)
     val n = spark.read.parquet(s"$outDir/embeddings.parquet").count()

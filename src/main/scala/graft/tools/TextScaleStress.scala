@@ -188,14 +188,7 @@ object TextScaleStress {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_text_stress").toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     blowUpDocs(spark, srcDir, outDir, factor)
     val n = spark.read.parquet(s"$outDir/documents.parquet").count()

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins that AQE's skew-join mitigation ENGAGES on a hot-key join under
@@ -15,25 +13,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition into subpartitions and replicates the matching build rows.
   * The thresholds here are scaled down so a local fixture trips the same
   * code path a production hot key would. */
-class AqeSkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AqeSkewJoinSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  override protected def sparkOverrides = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // scale the skew detector down to fixture size: a partition is skewed if
     // > factor × median and > threshold; make the hot partition trip both
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
     // force the sort-merge path: a broadcast join would dodge the skew
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private def smjs(p: SparkPlan): Seq[SortMergeJoinExec] =
     p.flatMap {

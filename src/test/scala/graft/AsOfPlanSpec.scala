@@ -1,27 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{AsOfJoinOps, GraftExtensions}
+import graft.plans.{AsOfJoinOps, AsOfJoinStrategy}
 
 /** Custom as-of join operator: LogicalPlan → Strategy → sorted-merge
-  * SparkPlan, registered via SparkSessionExtensions. */
-class AsOfPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  // built WITH the extension — proves the SparkSessionExtensions path (the
-  // registry query instead goes through extraStrategies on any session)
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  * SparkPlan, installed on a plain session by `AsOfJoinOps.ensureRegistered`
+  * (the one install path every as-of query takes). */
+class AsOfPlanSpec extends AnyFunSuite with SparkSuite {
 
   test("as-of semantics on a known fixture: latest ref <= t, ties, no-match") {
     import spark.implicits._
@@ -116,6 +103,16 @@ class AsOfPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val physical = out.queryExecution.executedPlan.toString
     assert(physical.contains("AsOfJoin")) // nodeName of AsOfJoinExec
     assert("Exchange hashpartitioning".r.findAllIn(physical).size == 2)
+  }
+
+  test("the strategy is installed once per session, on first as-of use") {
+    import spark.implicits._
+    val probes = Seq(("a", 1)).toDF("k", "t")
+    val refs = Seq(("a", 1, 1L)).toDF("rk", "rt", "v")
+    AsOfJoinOps.asof(probes, refs, "k", "rk", "t", "rt")
+    AsOfJoinOps.ensureRegistered(spark)
+    assert(spark.experimental.extraStrategies
+      .count(_ == AsOfJoinStrategy) == 1)
   }
 
   test("mismatched key/time types fail at PLAN time, by name") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the board-monitoring pipeline
@@ -10,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * relaxed_post ⊆ relaxed survives the per-mode dedup), the dedup's
   * one-row-per-document accounting, and the broadcast scaffold merges on
   * the ADAPTIVE-final plan. */
-class BoardPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BoardPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_board_pipeline").get
 

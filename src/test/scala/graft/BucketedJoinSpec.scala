@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -12,33 +10,26 @@ import graft.sources.SourceOps
   * `bucketBy(n, key).sortBy(key)` must join with NO exchange and NO sort —
   * the write-once/join-many layout that removes the only scaling shuffle in
   * the chunk star join (lineitem⋈orders) at 100 TB. */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val warehouse =
     java.nio.file.Files.createTempDirectory("graft_wh").toString
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
+  override protected def sparkOverrides = Map(
+    "spark.sql.warehouse.dir" -> warehouse,
     // force the sort-merge path so the assertion is about exchanges, not a
     // broadcast dodging them
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     // propagate the buckets' sortBy order to the scan's outputOrdering —
     // off by default since Spark 3.0 because multi-file buckets would need a
     // merge-sort per bucket; writeBucketed guarantees single-file buckets,
     // which is exactly the regime the flag is safe (and profitable) in
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
 
   override def beforeAll(): Unit = {
     SourceOps.writeBucketed(Tables.lineitem(spark, dir), "li_b", "l_orderkey", 8)
     SourceOps.writeBucketed(Tables.orders(spark, dir), "ord_b", "o_orderkey", 8)
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("bucketed fact-fact join plans with zero exchanges and zero sorts") {
     val joined = spark.table("li_b")

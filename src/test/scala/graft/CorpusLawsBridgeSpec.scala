@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -14,17 +12,9 @@ import graft.text.CorpusOps
   * mirror holds for the engine. Plus the subset-stability law exercised
   * directly through Spark plans (filter pushed below the split projection
   * must not change any document's routing). */
-class CorpusLawsBridgeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CorpusLawsBridgeSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("Spark split/mix columns equal the JVM mirror on every corpus row") {
     val rows = Tables.documents(spark, dir)

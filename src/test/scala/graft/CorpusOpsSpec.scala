@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.CorpusOps
@@ -14,16 +13,7 @@ import graft.text.CorpusOps
   * label-propagation rounds and whose correct answer (every node → min id)
   * fails loudly if pointer jumping or the changed-label convergence count is
   * wrong. */
-class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CorpusOpsSpec extends AnyFunSuite with SparkSuite {
 
   private def vertices(ids: Seq[Long]): DataFrame = {
     import spark.implicits._

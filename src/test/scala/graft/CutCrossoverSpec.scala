@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -10,7 +9,7 @@ import graft.model.Tables
   * ([[Tables.beyondCutCrossover]]) and the value-neutrality of the five
   * cut knobs it gates (scaffold / exposure panel / semi / anti / board —
   * the shapes round 17 reverted at gate scale and round 18 re-measured at
-  * blowup scale with CutCrossoverProbe).
+  * blowup scale with `CutProbe`, one shape per knob).
   *
   * Two families:
   *  - policy: the threshold reads the fact table's on-disk size and the
@@ -22,18 +21,9 @@ import graft.model.Tables
   *    change, which is what licenses gating it on something as
   *    value-irrelevant as corpus size.
   */
-class CutCrossoverSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CutCrossoverSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("small SFs sit below the default crossover threshold") {
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sim.SimilarityOps
@@ -14,17 +12,9 @@ import graft.sim.SimilarityOps
   * full 8-table OR-amplified pair sweep is the heaviest cut consumer (13
   * cuts per run: vectors + 3 per table via concurrent builders), so it is
   * the equality vehicle. */
-class CutPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
+class CutPolicySpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def sweep(indexDir: Option[String] = None): Seq[String] =
     SimilarityOps.ivfCosinePairs(spark, dir, indexDir)

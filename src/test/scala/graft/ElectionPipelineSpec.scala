@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the election-monitor pipeline
@@ -9,17 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * topic filtering (COMP drop + blacklist), the degree filter's cross-row
   * property, per-entity ride-along constancy, and the broadcast shape of
   * the merges on the ADAPTIVE-final plan. */
-class ElectionPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ElectionPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_election_pipeline").get
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.label.Labeler
@@ -11,17 +9,9 @@ import graft.model.Tables
 /** Engine invariants on the sf0.001 fixtures (order-insensitive properties
   * per SURVEY.md §5: dedup idempotence, pivot row-sum = group count, scaffold
   * completeness, classifier-path equivalence). */
-class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EngineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("mapPartitions classifier path equals the column-expression stub") {
     val viaExpr = Labeler.withStubLabels(Tables.chunkRows(spark, dir))

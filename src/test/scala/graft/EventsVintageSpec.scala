@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -18,16 +16,7 @@ import graft.streaming.EventStream
   * one additional assertion runs against the REAL driver testdata so the
   * next generator drift fails here, not in the driver.
   */
-class EventsVintageSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EventsVintageSpec extends AnyFunSuite with SparkSuite {
 
   // one unambiguous instant: 2024-03-15 12:34:56.789 UTC
   private val wallClock = "2024-03-15 12:34:56.789"

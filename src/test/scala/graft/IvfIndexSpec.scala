@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -15,23 +13,15 @@ import graft.sim.SimilarityOps
   * arithmetic, same tiebreaks, bit-identical rows — and (2) the scale
   * property: a search's list scan reads only the probed bucket directories,
   * via dynamic partition pruning on the executed plan. */
-class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IvfIndexSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val indexDir = {
     val d0 = java.nio.file.Files.createTempDirectory("ivf_index").toString
     SimilarityOps.buildIvfIndex(spark, dir, d0)
     d0
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Collect file scans through AQE wrappers — `AdaptiveSparkPlanExec` and
     * `QueryStageExec` hold their subplans outside `children`, so a plain

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.label.Labeler
@@ -10,17 +8,9 @@ import graft.model.Tables
 
 /** Batched-prompt classifier contract (`labeling.py:141-224`): chunk_size
   * rows per external call, id-keyed JSON parse, malformed-batch fallback. */
-class LabelerBatchedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LabelerBatchedSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("call count is ceil(unique / chunk_size) on a single partition") {
     // exact call-count arithmetic needs a known partition layout: the dedup
@@ -54,6 +44,23 @@ class LabelerBatchedSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("label"), col("motivation"))
     assert(viaBatch.exceptAll(viaExpr).isEmpty &&
       viaExpr.exceptAll(viaBatch).isEmpty)
+  }
+
+  test("q_label_batched's comparison counts a batched-side fanout row") {
+    import spark.implicits._
+    val cols = Seq("sentence_id", "entity_id", "part_entity_id", "label",
+      "motivation")
+    val expr = Seq(("s1", "e1", "p1", "P", "m1"), ("s2", "e1", "p1", "N", "m2"),
+      ("s2", "e2", "p2", "U", "unclear")).toDF(cols: _*)
+    def counts(batched: org.apache.spark.sql.DataFrame) = {
+      val r = Labeler.compareLabels(expr, batched).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(counts(expr) == ((3L, 0L)))
+    // one batched row emitted twice: the extra row must show up, not be
+    // paired away by the join
+    assert(counts(expr.union(expr.filter(col("sentence_id") === "s1"))) ==
+      ((4L, 1L)))
   }
 
   test("malformed batch response falls back to U/unclear for the whole batch") {

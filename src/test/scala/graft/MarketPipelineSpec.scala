@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the §3.1 end-to-end market pipeline
   * (`q_market_pipeline`) the row-hash gate can't state row-locally: scaffold
   * density, basket restriction and ordering, the zero-fill/net arithmetic,
   * and the broadcast shape of the panel merges on the ADAPTIVE-final plan. */
-class MarketPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MarketPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_market_pipeline").get
 

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MLlib-twin hardening: the estimator paths must survive corpus edge
   * cases the hand-rolled family handles by construction. */
-class MlOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MlOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("q_ml_minhash_neardup survives whitespace-only documents " +
       "(all-zero feature vectors would crash MinHashLSH)") {

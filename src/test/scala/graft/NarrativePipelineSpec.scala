@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the cross-source narrative pipeline
@@ -14,17 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads Excel with header=1/Unnamed-drop/Date-parse/Source_Type-stamp),
   * pinned HERE as frame equality so the gate itself stays parquet-driven
   * and side-effect-free. */
-class NarrativePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NarrativePipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_narrative_pipeline").get
 

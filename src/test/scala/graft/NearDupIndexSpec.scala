@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sim.SimilarityOps
@@ -18,17 +16,9 @@ import graft.sim.SimilarityOps
   *  - a TORN zone (part-files, no commit marker) is distrusted and
   *    rebuilt, same as SourceOps.cached's checkpoint rule.
   */
-class NearDupIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def withIndexDir[T](base: String)(f: => T): T =
     try {

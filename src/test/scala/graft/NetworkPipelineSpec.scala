@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the §3.1 graph-arm pipeline
@@ -10,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rescale booleans, and bit-identical determinism across runs (the G6
   * layout contract — same inputs, same seed, same coordinates, so the
   * node-set hash the oracle checks is stable). */
-class NetworkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NetworkPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_network_pipeline").get
 

@@ -9,7 +9,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -28,21 +27,12 @@ import graft.sources.SourceOps
   *  - a missing or empty path fails exactly as a plain read does;
   *  - a corpus rewritten at a reused path is counted and sized again.
   */
-class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ParquetReadSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private val inferKey =
     "spark.sql.sources.partitionColumnTypeInference.enabled"
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

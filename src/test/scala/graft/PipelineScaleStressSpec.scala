@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.PipelineScaleStress
@@ -11,17 +9,9 @@ import graft.tools.PipelineScaleStress
   * pattern): the fact blowup's construction laws at a tiny factor, and the
   * off-fact-key SortMergeJoin classifier the ×10/×25 plan pins rest on —
   * a parsing regression there would turn the scale audit into a no-op. */
-class PipelineScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineScaleStressSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("fact blowup is size-exact, key-unique, join-closed, dims verbatim") {
     val factor = 3

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-regression guard: pins the "plans you'd want at 100×" properties of
@@ -16,22 +14,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * lineage-cut checkpoints — and (b) widens guard COVERAGE: with checkpoints
   * skipped, the guard sees the whole pipeline instead of opaque RDD-scan
   * leaves, so a regression upstream of a cut can't hide from the sweep. */
-class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanGuardSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
+  // the registry's bench/gate broadcast threshold, so plans match theirs
+  override protected def sparkOverrides = Session.registryConf
 
   /** Build (not execute) a plan with checkpoints skipped and iterative
     * loops replaced by structural rounds — results are NOT valid here. */
   private def probe[T](f: => T): T = PlanProbe.planOnly.withValue(true)(f)
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Queries allowed to contain a nested-loop/cartesian join because the
     * non-equi side is a PROVABLY BOUNDED broadcast (documented at each site):

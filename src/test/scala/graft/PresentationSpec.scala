@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.report.Presentation
@@ -10,16 +8,7 @@ import graft.report.Presentation
 /** P8 presentation shaping: the greedy 80-char wrap's reference quirks
   * (`tool.py:11-46`) and the co-mention window truncation's branch map
   * (`network_analysis.py:146-151`). */
-class PresentationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PresentationSpec extends AnyFunSuite with SparkSuite {
 
   private def wrap(t: String, n: Int) = Presentation.wrap(t, n)
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Composition invariants of the §3.3 end-to-end report pipeline
@@ -10,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * group-key uniqueness across the stage joins, liveness of the coalesce
   * branches, the per-theme normalization identity, and the broadcast shape
   * of the response merges. */
-class ReportPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ReportPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_report_pipeline").get
 

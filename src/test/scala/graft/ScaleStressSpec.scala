@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.ScaleStress
@@ -10,17 +8,9 @@ import graft.tools.ScaleStress
   * instrument: deterministic bit-for-bit across runs, size-exact, and
   * id-unique — otherwise the recorded three-point curve in BASELINE.md
   * could not be re-derived. */
-class ScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleStressSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def dump(out: String): Seq[String] =
     spark.read.parquet(s"$out/embeddings.parquet")

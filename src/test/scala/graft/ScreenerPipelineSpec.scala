@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.ThemeTree
@@ -10,17 +8,9 @@ import graft.model.ThemeTree
   * (`q_screener_pipeline`): the tree→matrix column contract, the
   * leaf/parent/composite accounting identities, and the single-shuffle
   * broadcast shape on the ADAPTIVE-final plan. */
-class ScreenerPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScreenerPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pipeline = Registry.all.find(_.name == "q_screener_pipeline").get
 

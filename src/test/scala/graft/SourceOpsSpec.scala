@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SourceOps
 
-class SourceOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SourceOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("csv sheet sink/source round-trips a result table") {
     val tmp = java.nio.file.Files.createTempDirectory("sheets").toString

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.GraphOps
@@ -9,16 +7,7 @@ import graft.graph.GraphOps
 /** G6 spring layout: deterministic seeded Fruchterman-Reingold over a
   * bounded, already-aggregated edge list (presentation boundary — the
   * distributed work is the G2/G4 edge extraction upstream). */
-class SpringLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SpringLayoutSpec extends AnyFunSuite with SparkSuite {
 
   private def twoCliques = {
     import spark.implicits._

@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StatefulSessions
@@ -12,16 +10,7 @@ import graft.streaming.StatefulSessions.{ClosedSession, Ev}
 
 /** Multi-batch stateful sessionization: sessions close either when a later
   * event exceeds the gap or when event time moves past last+gap (timeout). */
-class StatefulSessionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StatefulSessionsSpec extends AnyFunSuite with SparkSuite {
 
   // base away from epoch 0: an event at exactly the initial watermark (0)
   // is dropped as late (filter is ts > watermark)

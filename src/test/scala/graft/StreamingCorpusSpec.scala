@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CorpusStream
@@ -9,19 +7,11 @@ import graft.streaming.CorpusStream
 /** Stream ≡ batch for the stateless corpus ingestion gate: every document
   * must leave the stream scrubbed, flagged, and split-routed exactly as the
   * batch projection computes it. */
-class StreamingCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_stream_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sparkOverrides = Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_stream_wh").toString)
 
   test("streaming corpus gate equals the batch projection once drained") {
     val staged = java.nio.file.Files.createTempDirectory("docs_stream")

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
 
 /** Stream ≡ batch for the windowed volume counts (complete mode, drained). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("streaming weekly counts equal the batch twin once drained") {
     // file stream sources require a directory; stage the single events file

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.label.Labeler
@@ -11,17 +9,9 @@ import graft.summarize.SummarizeOps
 
 /** The typed Aggregator summarizer must equal the column-expression form the
   * oracle gates (both: distinct → sorted → ' | ' join → budget truncation). */
-class SummarizeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SummarizeSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("typed Aggregator equals the column-expression summarizer") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -25,19 +24,10 @@ import graft.model.Tables
   *     a drift — if the generator changes their physical type, this fails and
   *     the change gets handled deliberately.
   */
-class TableContractSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableContractSpec extends AnyFunSuite with SparkSuite {
 
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
     "/root/testdata/sf0.1")
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private val expected: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.TextScaleStress
@@ -10,17 +8,9 @@ import graft.tools.TextScaleStress
   * (deterministic, size-exact, id-unique, schema-preserving) and its three
   * pins must hold at a small operating point — otherwise the recorded
   * curve in BASELINE.md could not be re-derived. */
-class TextScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextScaleStressSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def dump(out: String): Seq[String] =
     spark.read.parquet(s"$out/documents.parquet")

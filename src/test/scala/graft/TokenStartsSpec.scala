@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables
@@ -19,16 +17,7 @@ import graft.model.Tables
   * supplementary-plane tests below pin the unit contract itself — offsets
   * are CODE POINTS end-to-end, and `Masking.maskUdf` converts them to code
   * units before splicing, so the chain is correct on emoji-bearing text. */
-class TokenStartsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TokenStartsSpec extends AnyFunSuite with SparkSuite {
 
   /** Reference: non-overlapping left-to-right scan. */
   private def refStarts(text: String, token: String): Seq[Int] = {

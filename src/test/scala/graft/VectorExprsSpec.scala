@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorExprs
@@ -10,15 +8,7 @@ import graft.functions.VectorExprs
 /** The codegen DotProduct must be bit-identical to the interpreted
   * left-to-right fold it replaced (that equivalence is what keeps the DuckDB
   * oracles valid). */
-class VectorExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VectorExprsSpec extends AnyFunSuite with SparkSuite {
 
   test("codegen dot equals interpreted fold bit-for-bit") {
     VectorExprs.register(spark)
