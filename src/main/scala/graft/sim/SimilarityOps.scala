@@ -420,26 +420,6 @@ object SimilarityOps {
       asg.getFileSystem(s.sparkContext.hadoopConfiguration), asg)
   }
 
-  /** Bucketed-TABLE form of [[buildNearDupIndex]] — the cluster layout:
-    * the assignment zone lands bucketed on the FULL candidate-join key
-    * (tbl, bucket) via [[graft.sources.SourceOps.writeBucketed]], so the
-    * standing-corpus sweep's self-join reuses the layout's hash
-    * partitioning and plans with ZERO exchanges on either side
-    * (BucketedJoinSpec pins the executed plan); the only shuffle left in
-    * candidate generation is the cross-table pair dedup. Size `buckets`
-    * so one bucket's assignment rows fit executor memory at target SF
-    * (rows are 4 small integers — millions per bucket are fine). */
-  def buildNearDupIndexBucketed(s: SparkSession, d: String, table: String,
-      buckets: Int): Unit =
-    graft.sources.SourceOps.writeBucketed(ivfAssignments(s, d), table,
-      Seq("tbl", "bucket"), buckets)
-
-  /** Sweep from a bucketed assignment table
-    * (see [[buildNearDupIndexBucketed]]). */
-  def ivfCosinePairsFromTable(s: SparkSession, d: String,
-      table: String): DataFrame =
-    pairsFromAssignments(s, d, s.table(table))
-
   /** Per-JVM memo of built near-dup indexes, keyed by corpus dir PLUS a
     * file-metadata fingerprint of its embeddings table (names, lengths,
     * mtimes): the gate queries route through this so one Verify/Bench
@@ -447,19 +427,18 @@ object SimilarityOps {
     * (including `q_semantic_dedup`, which consumes the same pair set)
     * reuses the persisted assignments. The fingerprint makes a
     * REGENERATED corpus at the same path rebuild instead of being served
-    * stale assignments — within a JVM as well as across JVMs (temp dirs
-    * die with the machine either way). */
+    * stale assignments — within a JVM as well as across JVMs. */
   private val nearDupIndexMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]
 
-  /** Test hook: forget per-JVM memoized index locations (the durable-zone
-    * path below must then rediscover — not rebuild — a committed index). */
+  /** Test hook: forget per-JVM memoized index locations (the resolver
+    * must then rediscover — not rebuild — a committed zone). */
   private[graft] def resetNearDupIndexMemo(): Unit = nearDupIndexMemo.clear()
 
-  /** Test seam: runs between a durable-zone build and its publish rename,
-    * where a racing driver's publish can land. Production no-op; the spec
-    * injects a winner here to pin the lost-race recovery deterministically
-    * (the window is otherwise unreachable from a test). */
+  /** Test seam: runs between a zone build and its publish rename, where a
+    * racing driver's publish can land. Production no-op; the spec injects a
+    * winner here to pin the lost-race recovery deterministically (the
+    * window is otherwise unreachable from a test). */
   private[graft] var publishRaceHook: () => Unit = () => ()
 
   /** File-metadata fingerprint of the corpus' embeddings table, resolved
@@ -470,9 +449,9 @@ object SimilarityOps {
     * listing is null-guarded (`listStatus` contracts allow null / throw on
     * IO errors depending on the FS); an unreadable corpus fingerprints as
     * `absent`, so the subsequent build fails loudly at the scan instead of
-    * NPE-ing here — and the durable-zone resolver treats `absent` as
-    * NON-memoizable (below), so an IO hiccup can never key a shared zone
-    * that a different corpus' hiccup would then collide with. The digest
+    * NPE-ing here — and the resolver treats `absent` as NON-memoizable
+    * (below), so an IO hiccup can never key a shared zone that a different
+    * corpus' hiccup would then collide with. The digest
     * is MD5 over the corpus PATH plus the listing (not a 32-bit hashCode):
     * two corpora sharing one index dir can't collide on coincidental file
     * metadata, and the collision space is cryptographic, not 2^32. */
@@ -496,42 +475,40 @@ object SimilarityOps {
     } catch { case _: java.io.IOException => "absent" }
   }
 
+  /** Zone base used when `spark.graft.nearDupIndexDir` is unset: one temp
+    * directory per JVM, so sandbox runs publish through the same
+    * build-aside/rename/manifest path as a configured base. */
+  private[graft] lazy val nearDupTempBase: String =
+    java.nio.file.Files.createTempDirectory("graft_ndidx_").toString
+
   /** Resolve (building if needed) the standing assignment index for corpus
-    * `d`. Two modes:
+    * `d`: the zone `<base>/nd_<fingerprint>`, where `base` is
+    * `spark.graft.nearDupIndexDir` (a durable location shared across
+    * JVMs/sessions, on whatever FS it names) or else [[nearDupTempBase]].
+    * A committed zone ([[graft.sources.SourceOps.committedDir]] on its
+    * `assignments` subdir) is REUSED without rebuilding, so a new driver
+    * pays zero quantizer cost against an already-indexed corpus; a
+    * regenerated corpus changes the fingerprint and lands in a fresh zone
+    * (NearDupIndexSpec pins both behaviors).
     *
-    *  - `spark.graft.nearDupIndexDir` SET (the cluster mode): the index
-    *    lives at `<dir>/nd_<fingerprint>` on whatever FS the conf names —
-    *    one durable zone shared across JVMs/sessions. A committed zone
-    *    ([[graft.sources.SourceOps.committedDir]] on its `assignments`
-    *    subdir) is REUSED without rebuilding, so a new driver pays zero
-    *    quantizer cost against an already-indexed corpus; a regenerated
-    *    corpus changes the fingerprint and lands in a fresh subdir
-    *    (NearDupIndexSpec pins both behaviors).
-    *  - conf unset (sandbox/ad-hoc): a per-JVM temp dir, built on first
-    *    use, memoized for the session.
-    *
-    * The memo key carries the fingerprint AND the mode (the durable base
-    * or `temp`), so within a JVM a regenerated corpus triggers rebuild
-    * rather than stale reuse — and flipping `spark.graft.nearDupIndexDir`
-    * mid-session switches modes instead of serving the other mode's
-    * cached location.
+    * The memo key carries the fingerprint AND the base, so within a JVM a
+    * regenerated corpus triggers rebuild rather than stale reuse — and
+    * flipping `spark.graft.nearDupIndexDir` mid-session re-resolves under
+    * the new base instead of serving the old base's cached location.
     *
     * Concurrency: within a JVM `computeIfAbsent` serializes builders.
-    * ACROSS drivers the durable zone is published by building into a
-    * throwaway sibling (`.build_nd_<fp>_<uuid>`) and renaming it onto the
-    * final path ([[publishDurableZone]] — atomic on HDFS and local FS, and
-    * robust to BOTH race outcomes of Hadoop's rename contract; on object
-    * stores whose rename is copy-based the publish is not atomic — pair
-    * the conf with an HDFS-compatible index location there). An `absent`
-    * fingerprint (unreadable corpus at fingerprint time) resolves to None
-    * and the caller COMPUTES the pairs directly — same rows (the oracle
-    * pins the two routes equal), nothing persisted or memoized. The
-    * alternatives are all worse: a shared `nd_absent` zone would be served
-    * across DIFFERENT corpora whose listings ever hiccup, a memoized
-    * `$d@absent` entry could outlive a corpus regeneration, and an
-    * unkeyed driver-local temp build on a real cluster (executors writing
-    * `/tmp` shards to their own disks) would silently produce a
-    * near-empty index. */
+    * ACROSS drivers a zone is published by building into a throwaway
+    * sibling (`.build_nd_<fp>_<uuid>`) and renaming it onto the final path
+    * ([[publishDurableZone]] — atomic on HDFS and local FS, and robust to
+    * BOTH race outcomes of Hadoop's rename contract; on object stores whose
+    * rename is copy-based the publish is not atomic — pair the conf with
+    * an HDFS-compatible index location there). An `absent` fingerprint
+    * (unreadable corpus at fingerprint time) resolves to None and the
+    * caller COMPUTES the pairs directly — same rows (the oracle pins the
+    * two routes equal), nothing persisted or memoized: a shared
+    * `nd_absent` zone would be served across DIFFERENT corpora whose
+    * listings ever hiccup, and a memoized `$d@absent` entry could outlive a
+    * corpus regeneration. */
   private[graft] def nearDupIndexFor(s: SparkSession,
       d: String): Option[String] =
     resolveNearDupIndex(s, d, corpusFingerprint(s, d))
@@ -541,20 +518,15 @@ object SimilarityOps {
     * real listing IOException on a readable corpus. */
   private[graft] def resolveNearDupIndex(s: SparkSession, d: String,
       fp: String): Option[String] =
-    if (fp == "absent") None // compute-direct: never keyed, never durable
-    else Some(s.conf.getOption("spark.graft.nearDupIndexDir") match {
-      case Some(base) => nearDupIndexMemo.computeIfAbsent(s"$d@$fp@$base",
-        _ => publishDurableZone(s, d, fp, base))
-      case None =>
-        nearDupIndexMemo.computeIfAbsent(s"$d@$fp@temp", _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft_ndidx_").toString
-          buildNearDupIndex(s, d, out)
-          out
-        })
-    })
+    if (fp == "absent") None // compute-direct: never keyed, never persisted
+    else {
+      val base = s.conf.getOption("spark.graft.nearDupIndexDir")
+        .getOrElse(nearDupTempBase)
+      Some(nearDupIndexMemo.computeIfAbsent(s"$d@$fp@$base",
+        _ => publishDurableZone(s, d, fp, base)))
+    }
 
-  /** Build-and-publish one durable zone at `<base>/nd_<fp>`, returning its
+  /** Build-and-publish one zone at `<base>/nd_<fp>`, returning its
     * path. A committed zone is adopted without building. Publication is a
     * rename of a fully-built sibling, but the OUTCOME is re-probed rather
     * than inferred from rename's return value: when the destination
@@ -599,7 +571,7 @@ object SimilarityOps {
     finalPath.toString
   }
 
-  /** Tiny driver-side provenance record inside each durable zone: which
+  /** Tiny driver-side provenance record inside each zone: which
     * corpus (path) at which fingerprint built it, and when. Read back by
     * [[pruneNearDupZones]] to PROVE a zone stale before deleting it. */
   private def writeZoneManifest(fs: org.apache.hadoop.fs.FileSystem,
@@ -755,17 +727,11 @@ object SimilarityOps {
     * the persisted assignments instead of rebuilding the quantizers
     * (amortized standing-corpus mode). `None` computes them fresh. */
   private[graft] def ivfCosinePairs(s: SparkSession, d: String,
-      indexDir: Option[String] = None): DataFrame =
-    pairsFromAssignments(s, d, indexDir
-      .map(ix => graft.sources.SourceOps.readParquet(s, s"$ix/assignments"))
-      .getOrElse(ivfAssignments(s, d)))
-
-  /** Candidate pairs + exact verification from any assignment frame
-    * (computed, parquet-persisted, or bucketed-table). */
-  private def pairsFromAssignments(s: SparkSession, d: String,
-      assignments: DataFrame): DataFrame = {
+      indexDir: Option[String] = None): DataFrame = {
     val vs = vectors(s, d)
-    val asg = assignments
+    val asg = indexDir
+      .map(ix => graft.sources.SourceOps.readParquet(s, s"$ix/assignments"))
+      .getOrElse(ivfAssignments(s, d))
       .withColumn("bkey", col("tbl") * BucketKeyBase + col("bucket"))
     val cand = asg
       .select(col("tbl"), col("bucket"), col("bkey"), col("vec_id").as("id_a"))
@@ -934,9 +900,9 @@ object SimilarityOps {
     if (graft.PlanProbe.planOnly.value) ivfCosinePairs(s, d)
     else ivfCosinePairs(s, d, nearDupIndexFor(s, d))
 
-  /** Shared oracle for every near-dup sweep route (computed, persisted,
-    * bucketed table): the pair ALGEBRA is identical, only the physical
-    * assignment source differs, so one DuckDB twin gates all of them. */
+  /** Shared oracle for both near-dup sweep routes (computed, persisted):
+    * the pair ALGEBRA is identical, only the assignment source differs, so
+    * one DuckDB query gates both. */
   private lazy val nearDupOracle: String =
     s"""WITH $vectorsCte,
        |$ivfPairCtes
@@ -951,132 +917,14 @@ object SimilarityOps {
       .limit(100),
     Some(nearDupOracle))
 
-  /** Per-JVM memo of the gate's BUCKETED assignment zone — the cluster
-    * layout twin of [[nearDupIndexFor]]. The table NAME carries the corpus
-    * fingerprint, so a regenerated corpus can never read a stale saved
-    * table (it simply misses the catalog probe and rebuilds under a new
-    * name); within a JVM the catalog probe makes the build once-only. An
-    * `absent` fingerprint (transient listing failure) returns None — a
-    * shared `graft_nd_asg_absent` table would otherwise serve one corpus'
-    * assignments to a DIFFERENT corpus whose listing also hiccupped, the
-    * exact hazard [[resolveNearDupIndex]] excludes from its memo; the
-    * caller computes directly instead. The table additionally records its
-    * corpus path + fingerprint as TBLPROPERTIES so [[pruneNearDupTables]]
-    * can later PROVE it stale. */
-  private val bucketedZoneLock = new Object
-  private def bucketedZoneFor(s: SparkSession, d: String): Option[String] =
-    bucketedZoneLock.synchronized {
-      // serialized: concurrent gate invocations in one JVM must not race
-      // the tableExists probe into a double delete+CTAS on one location
-      val fp = corpusFingerprint(s, d)
-      if (fp == "absent") None else {
-      val table = s"graft_nd_asg_$fp"
-      if (!s.catalog.tableExists(table)) {
-        // With the default IN-MEMORY catalog a fresh JVM starts with an
-        // empty catalog even when a previous session left the managed
-        // table's files in the warehouse — and CTAS refuses a non-empty
-        // location. Clear orphaned files before rebuilding (bucketing
-        // metadata lives in the catalog, so orphaned files can't simply be
-        // re-registered). A Hive-metastore deployment never hits this
-        // branch twice: the table survives the JVM and tableExists is true.
-        // The orphan path is derived from the CURRENT database's location
-        // (not <warehouse>/<table> by convention), so a session that
-        // switched databases cleans the right dir — and saveAsTable below
-        // creates the table in that same current database.
-        val db = s.catalog.currentDatabase
-        val loc = new org.apache.hadoop.fs.Path(
-          s.catalog.getDatabase(db).locationUri,
-          table.toLowerCase(java.util.Locale.ROOT))
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        try {
-          if (fs.exists(loc)) fs.delete(loc, true)
-          buildNearDupIndexBucketed(s, d, table, 8)
-          // Spark SQL string literals process backslash escapes, so both
-          // the quote AND the backslash must be escaped or a path like
-          // /data/a\b is stored garbled — and the pruner would then
-          // re-fingerprint the garbled path and drop a LIVE table
-          def q(x: String) =
-            x.replace("\\", "\\\\").replace("'", "\\'")
-          s.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-            s"'graft.nd.corpus'='${q(d)}','graft.nd.fingerprint'='$fp')")
-        } catch {
-          // cross-DRIVER race on a shared metastore: the per-JVM lock
-          // can't serialize two drivers' tableExists→CTAS sequences, so
-          // the loser's create may throw (TableAlreadyExists /
-          // location-not-empty). The winner's table holds the SAME
-          // bit-deterministic content for this fingerprint — adopt it;
-          // rethrow anything that isn't explained by a completed winner.
-          case e: org.apache.spark.sql.AnalysisException =>
-            if (!s.catalog.tableExists(table)) throw e
-        }
-      }
-      Some(table)
-      }
-    }
-
-  /** Catalog twin of [[pruneNearDupZones]]: every corpus regeneration
-    * strands the previous `graft_nd_asg_<fp>` bucketed table (full
-    * assignment data — the same tens-of-GB-at-scale debris class as the
-    * parquet zones), which nothing else reclaims. Same staleness-PROVEN
-    * discipline: a table is dropped only when its recorded corpus
-    * re-fingerprints to a DIFFERENT real digest (`dropped_regenerated`) or
-    * the corpus is positively gone (`dropped_corpus_gone`); tables with no
-    * provenance properties (pre-provenance builds, or anything else whose
-    * name merely collides with the prefix) and transient-IO cases are
-    * KEPT. Dropping a MANAGED table deletes its files; scans the current
-    * database, where [[bucketedZoneFor]] creates the zones. */
-  def pruneNearDupTables(s: SparkSession): Seq[(String, String)] =
-    bucketedZoneLock.synchronized {
-      import scala.jdk.CollectionConverters._
-      val db = s.catalog.currentDatabase
-      val zones = s.catalog.listTables(db).collectAsList().asScala.toSeq
-        .map(_.name).filter(_.startsWith("graft_nd_asg_")).sorted
-      zones.map { t =>
-        val props = s.sql(s"SHOW TBLPROPERTIES $t").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        (props.get("graft.nd.corpus"), props.get("graft.nd.fingerprint")) match {
-          case (Some(corpus), Some(fp)) =>
-            corpusFingerprint(s, corpus) match {
-              case f if f == fp => t -> "kept"
-              case f if f != "absent" =>
-                s.sql(s"DROP TABLE $t"); t -> "dropped_regenerated"
-              case _ =>
-                // absent folds all IOExceptions; re-probe existence to
-                // tell corpus-gone from a transient error (keep on doubt)
-                val gone = try {
-                  val cp = new org.apache.hadoop.fs.Path(
-                    s"$corpus/embeddings.parquet")
-                  !cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-                    .exists(cp)
-                } catch { case _: java.io.IOException => false }
-                if (gone) { s.sql(s"DROP TABLE $t"); t -> "dropped_corpus_gone" }
-                else t -> "kept"
-            }
-          case _ => t -> "kept" // unprovable — conservative
-        }
-      }
-    }
-
-  /** The bucketed-table sweep under the full driver oracle gate: same pair
-    * algebra as `q_embed_neardup_ivf`, but candidates come from the
-    * bucketed assignment TABLE, whose (tbl, bucket) hash layout the
-    * candidate self-join reuses with zero exchanges (BucketedJoinSpec pins
-    * the executed plan). Plan-only mode keeps the computed path for the
-    * same reason [[gatePairs]] does: materializing a table is an eager job
-    * the registry-wide plan sweep must not pay. A None zone (corpus
-    * unreadable at fingerprint time) also computes directly — same rows,
-    * no shared-table pollution; if the corpus is truly gone the scan fails
-    * loudly rather than serving another corpus' assignments. */
+  /** The index-free sweep (assignments computed in-plan, the route
+    * plan-only mode and an `absent` fingerprint take) under the shared
+    * near-dup oracle. The name is kept for registry continuity. */
   private val qNearDupIvfBucketed = Q(
     "q_embed_neardup_ivf_bucketed",
-    (s, d) =>
-      (if (graft.PlanProbe.planOnly.value) ivfCosinePairs(s, d)
-       else bucketedZoneFor(s, d) match {
-         case Some(t) => ivfCosinePairsFromTable(s, d, t)
-         case None => ivfCosinePairs(s, d)
-       })
-        .orderBy(col("cos").desc, col("id_a"), col("id_b"))
-        .limit(100),
+    (s, d) => ivfCosinePairs(s, d)
+      .orderBy(col("cos").desc, col("id_a"), col("id_b"))
+      .limit(100),
     Some(nearDupOracle))
 
   /** SemDeDup-style semantic dedup END-TO-END: the IVF within-bucket cosine

@@ -497,11 +497,9 @@ object InvariantCheck {
     case e: Throwable => Some(s"ivf_supers: failed to run: ${e.getMessage}")
   }
 
-  /** The ONE definition of IVF pair recall — (hit pairs, true pairs)
-    * against the brute-force ground truth — shared by the release gate
-    * below and the tuning probe (RecallProbe), so the probe can never
-    * silently measure a different quantity than the gate asserts. */
-  private[tools] def ivfRecallCounts(spark: SparkSession,
+  /** IVF pair recall as (hit pairs, true pairs) against the brute-force
+    * ground truth. */
+  private def ivfRecallCounts(spark: SparkSession,
       dir: String): (Long, Long) = {
     val bf = graft.sim.SimilarityOps.bruteForcePairs(spark, dir)
     val ivf = graft.sim.SimilarityOps.ivfCosinePairs(spark, dir)

@@ -75,113 +75,6 @@ class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
     assert(joined.count() == plainCount)
   }
 
-  test("bucketed near-dup assignment zone: exchange-free candidate " +
-      "self-join, sweep bit-identical to the computed path") {
-    import graft.sim.SimilarityOps
-    SimilarityOps.buildNearDupIndexBucketed(spark, dir, "nd_asg", 8)
-    // the candidate-generation fragment: the (tbl, bucket) self-join must
-    // reuse the table's hash layout on BOTH sides — zero exchanges
-    val t = spark.table("nd_asg")
-    val selfJoin = t.select(col("tbl"), col("bucket"),
-      col("vec_id").as("id_a"))
-      .join(t.select(col("tbl"), col("bucket"), col("vec_id").as("id_b")),
-        Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-    val (_, plan) = PlanCheck.executedFinalPlan(selfJoin)
-    assert(plan.contains("SortMergeJoin"))
-    assert(!plan.contains("Exchange"),
-      s"bucketed assignment self-join should not shuffle:\n$plan")
-    // and the full sweep through the table equals the computed path
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("id_a", "id_b").collect()
-        .map(r => s"${r.get(0)}|${r.get(1)}|${r.get(2)}|${r.get(3)}").toSeq
-    assert(key(SimilarityOps.ivfCosinePairsFromTable(spark, dir, "nd_asg"))
-      == key(SimilarityOps.ivfCosinePairs(spark, dir)),
-      "bucketed-table sweep diverged from the computed quantizers")
-  }
-
-  test("registered bucketed-route gate survives an orphaned warehouse " +
-      "location and matches the parquet route") {
-    import graft.sim.SimilarityOps
-    // simulate a FRESH JVM against a warehouse a previous session wrote:
-    // the in-memory catalog is empty but the managed table's files are on
-    // disk — CTAS refuses a non-empty location, so the resolver must clear
-    // the orphan before rebuilding (the in-code comment's exact scenario)
-    val fp = SimilarityOps.corpusFingerprint(spark, dir)
-    val table = s"graft_nd_asg_$fp"
-    val loc = java.nio.file.Paths.get(warehouse,
-      table.toLowerCase(java.util.Locale.ROOT))
-    java.nio.file.Files.createDirectories(loc)
-    java.nio.file.Files.writeString(loc.resolve("part-orphan"), "junk")
-    assert(!spark.catalog.tableExists(table))
-    def rows(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, dir).collect()
-        .map(_.toString).toSeq
-    val got = rows("q_embed_neardup_ivf_bucketed")
-    assert(got.nonEmpty)
-    assert(spark.catalog.tableExists(table),
-      "the gate must have registered the bucketed assignment zone")
-    // both physical routes produce identical gate output (shared oracle)
-    assert(got == rows("q_embed_neardup_ivf"),
-      "bucketed-route gate diverged from the parquet route")
-  }
-
-  test("bucketed gate never keys a shared table off an unreadable corpus") {
-    import graft.sim.SimilarityOps
-    // an unreadable corpus fingerprints as "absent"; the gate must fall
-    // back to computing (which fails loudly at the scan) rather than read
-    // or create graft_nd_asg_absent — a fingerprint-less SHARED name that
-    // a different corpus' listing hiccup would then silently serve
-    val ghost = "/nonexistent/graft_corpus"
-    assert(SimilarityOps.corpusFingerprint(spark, ghost) == "absent")
-    intercept[Exception] {
-      SparkEntry.queries("q_embed_neardup_ivf_bucketed")(spark, ghost)
-        .collect()
-    }
-    assert(!spark.catalog.tableExists("graft_nd_asg_absent"),
-      "an unreadable corpus must never create the shared absent table")
-  }
-
-  test("table pruner drops only provably stale bucketed assignment zones") {
-    import graft.sim.SimilarityOps
-    def gate(d: String) =
-      SparkEntry.queries("q_embed_neardup_ivf_bucketed")(spark, d).collect()
-    // zone 1: the standing testdata corpus → kept
-    gate(dir)
-    val fpKeep = SimilarityOps.corpusFingerprint(spark, dir)
-    // zone 2: a corpus that is then REGENERATED → dropped_regenerated
-    val corpus = java.nio.file.Files.createTempDirectory("ndtab").toString
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    emb.write.parquet(s"$corpus/embeddings.parquet")
-    gate(corpus)
-    val fpOld = SimilarityOps.corpusFingerprint(spark, corpus)
-    emb.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    assert(SimilarityOps.corpusFingerprint(spark, corpus) != fpOld)
-    // zone 3: a corpus deleted outright → dropped_corpus_gone
-    val corpus2 = java.nio.file.Files.createTempDirectory("ndtab2").toString
-    emb.write.parquet(s"$corpus2/embeddings.parquet")
-    gate(corpus2)
-    val fpGone = SimilarityOps.corpusFingerprint(spark, corpus2)
-    org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(corpus2), true)
-    // a prefix-colliding table WITHOUT provenance properties → kept
-    spark.sql(
-      "CREATE TABLE graft_nd_asg_foreign (x INT) USING parquet")
-    try {
-      val report = SimilarityOps.pruneNearDupTables(spark).toMap
-      assert(report(s"graft_nd_asg_$fpKeep") == "kept")
-      assert(report(s"graft_nd_asg_$fpOld") == "dropped_regenerated")
-      assert(report(s"graft_nd_asg_$fpGone") == "dropped_corpus_gone")
-      assert(report("graft_nd_asg_foreign") == "kept")
-      assert(spark.catalog.tableExists(s"graft_nd_asg_$fpKeep"))
-      assert(!spark.catalog.tableExists(s"graft_nd_asg_$fpOld"))
-      assert(!spark.catalog.tableExists(s"graft_nd_asg_$fpGone"))
-      // the kept zone still answers the gate (files intact, not just meta)
-      assert(gate(dir).nonEmpty)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_nd_asg_foreign")
-  }
-
   test("aggregation on the bucket key also skips the exchange") {
     val agg = spark.table("li_b")
       .groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("q"))

@@ -11,6 +11,7 @@ import graft.sim.SimilarityOps
   *    fingerprint-derived subpath, and a committed zone is REUSED without
   *    rebuilding even after the per-JVM memo is lost (a fresh driver
   *    against a standing corpus pays zero quantizer cost);
+  *  - conf unset → the same publish path runs under a per-JVM temp base;
   *  - corpus regenerated → the fingerprint changes, so the memo/zone can
   *    never serve stale assignments;
   *  - a TORN zone (part-files, no commit marker) is distrusted and
@@ -177,13 +178,31 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   test("flipping the index-dir conf mid-session switches modes instead " +
       "of serving the other mode's cached location") {
     SimilarityOps.resetNearDupIndexMemo()
-    val temp = SimilarityOps.nearDupIndexFor(spark, dir).get // temp mode
+    // conf unset: the zone sits under the per-JVM temp base
+    val temp = SimilarityOps.nearDupIndexFor(spark, dir).get
     val base = java.nio.file.Files.createTempDirectory("ndix8").toString
     withIndexDir(base) {
       val durable = SimilarityOps.nearDupIndexFor(spark, dir).get
       assert(durable.startsWith(base) && durable != temp,
         s"conf flip must re-resolve into the durable dir, got $durable")
     }
+  }
+
+  test("conf unset: the zone is published under the per-JVM temp base " +
+      "with a manifest, and the pruner keeps it") {
+    SimilarityOps.resetNearDupIndexMemo()
+    val tempBase = SimilarityOps.nearDupTempBase
+    val fp = SimilarityOps.corpusFingerprint(spark, dir)
+    val zone = SimilarityOps.nearDupIndexFor(spark, dir).get
+    assert(zone == s"$tempBase/nd_$fp")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$zone/assignments/_SUCCESS")),
+      "the temp-base zone must carry committed assignments")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$zone/corpus.json")),
+      "the temp-base zone must carry the provenance manifest")
+    val report = SimilarityOps.pruneNearDupZones(spark, tempBase).toMap
+    assert(report(s"nd_$fp") == "kept")
   }
 
   test("a lost publish race adopts the winner's zone and strands no build") {

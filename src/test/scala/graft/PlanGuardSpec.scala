@@ -57,11 +57,9 @@ class PlanGuardSpec extends AnyFunSuite with SparkSuite {
                                // singleton stats); fine scoring and the
                                // pair join are hash equi-joins — pinned
                                // below and by InvariantCheck's super bound
-    "q_embed_neardup_ivf_bucketed", // plan-only mode routes through the
-                               // same computed quantizer path (building the
-                               // bucketed table is an eager job the plan
-                               // sweep must not pay), so the same O(√n)
-                               // super-set broadcast appears
+    "q_embed_neardup_ivf_bucketed", // the index-free sweep: the same
+                               // computed quantizer path, so the same
+                               // O(√n) super-set broadcast appears
     "q_semantic_dedup",        // same quantizer broadcasts feeding the CC loop
     "q_media_features",        // fixed 8-slot feature positions
     "q_similarity_topk",       // single broadcast query vector
