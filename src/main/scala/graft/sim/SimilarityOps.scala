@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1028,28 +1028,22 @@ object SimilarityOps {
          |ORDER BY label, dim""".stripMargin))
 
   /** Quantized per-label centroids as one row per centroid with the vector
-    * re-assembled in dimension order — the broadcast side of every IVF
-    * stage. */
+    * re-assembled in dimension order — the codebook of every IVF stage. */
   private def centroidVectors(vs: DataFrame): DataFrame =
     quantizedCentroids(
       vs.select(col("label").as("c_label"), col("v")), "c_label")
 
   /** IVF coarse pass: assign every vector to its nearest (dot-product)
-    * quantized label-centroid — broadcast 10 centroids × corpus, argmax with
-    * deterministic tiebreak — and report the assignment×label confusion
-    * counts. At scale this is the probe-list builder: follow-up exact search
-    * touches only the assigned partition. */
+    * quantized label-centroid — the 10-entry codebook scored row-locally,
+    * argmax with deterministic tiebreak — and report the assignment×label
+    * confusion counts. At scale this is the probe-list builder: follow-up
+    * exact search touches only the assigned partition. */
   private val qIvfAssign = Q(
     "q_embed_ivf_assign",
     (s, d) => {
-      val vs = vectors(s, d)
-      val cents = centroidVectors(vs)
-      val assigned = vs.crossJoin(broadcast(cents))
-        .withColumn("score", round(dot(col("v"), col("cv")), 6))
-        .groupBy(col("vec_id"), col("label"))
-        .agg(max_by(col("c_label"), struct(col("score"), -col("c_label")))
-          .as("assigned"))
-      assigned.groupBy(col("label"), col("assigned"))
+      val vs = withCodebook(vectors(s, d))
+      vs.select(col("label"), nearestCode(col("v"), col("cb")).as("assigned"))
+        .groupBy(col("label"), col("assigned"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("label"), col("assigned"))
     },
@@ -1084,41 +1078,81 @@ object SimilarityOps {
 
   // ---- IVF end-to-end search (probe → bucket scan → top-k) ----
 
+  /** One codebook entry: a centroid's label and its quantized vector. */
+  private case class Code(c_label: Int, cv: Seq[Double])
+
+  /** The codebook as a column `cb: array<struct<c_label, cv>>`, computed
+    * from `vs` itself as a scalar subquery, so building the frame runs no
+    * job. (The subquery is projected into a column before any lambda uses
+    * it: Spark does not resolve a scalar subquery inside a lambda.) */
+  private def withCodebook(vs: DataFrame): DataFrame =
+    vs.withColumn("cb", centroidVectors(vs)
+      .agg(collect_list(struct(col("c_label"), col("cv")))).scalar())
+
+  /** Collected codebooks of persisted indexes, keyed on the centroids path
+    * and held with the leaf-file listing they were collected from — the
+    * [[graft.sources.SourceOps.readParquet]] rule: an unchanged listing
+    * names the same bytes. */
+  private val codebookMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (graft.sources.SourceOps.Listing, Seq[Code])]()
+
+  /** `<indexDir>/centroids` as a literal codebook column. The codebook is
+    * ≤ |codebook| rows and frozen between rebuilds, so it is collected once
+    * per listing and inlined into every later build, append and search
+    * plan: no broadcast, no join, no job. As in `readParquet`, no job runs
+    * under a lock; racing readers may both collect, and the last one wins. */
+  private def persistedCodebook(s: SparkSession, indexDir: String): Column = {
+    val path = s"$indexDir/centroids"
+    val files = graft.sources.SourceOps.listing(s, path)
+    val codes = codebookMemo.get(path) match {
+      case (`files`, c) => c
+      case _ =>
+        val c = graft.sources.SourceOps.readParquet(s, path)
+          .select(col("c_label"), col("cv")).collect()
+          .map(r => Code(r.getInt(0), r.getSeq[Double](1))).toSeq
+        if (files.nonEmpty) codebookMemo.put(path, (files, c))
+        c
+    }
+    typedLit(codes)
+  }
+
+  /** Every codebook entry scored against `v`: the rounded dot, then
+    * `-c_label`, so the struct order is score descending, then `c_label`
+    * ascending — the ONE definition of the IVF scoring and its tiebreak,
+    * shared by the in-memory search, the persisted build, the incremental
+    * append and the search probes. That makes the pinned contract "an
+    * appended vector lands exactly where a rebuild would put it"
+    * structural rather than a convention kept in several copies. */
+  private def scoredCodes(v: Column, cb: Column): Column =
+    transform(cb, c => struct(round(dot(v, c.getField("cv")), 6).as("score"),
+      (-c.getField("c_label")).as("neg_label"),
+      c.getField("c_label").as("c_label")))
+
+  /** The nearest codebook entry's label (row-local argmax). */
+  private def nearestCode(v: Column, cb: Column): Column =
+    array_max(scoredCodes(v, cb)).getField("c_label")
+
+  /** The `nprobe` nearest codebook labels, nearest first (row-local
+    * top-n over the ≤ |codebook| entries). */
+  private def probedCodes(v: Column, cb: Column, nprobe: Int): Column =
+    transform(slice(sort_array(scoredCodes(v, cb), asc = false), 1, nprobe),
+      _.getField("c_label"))
+
   /** Builder shared by the search and recall gates: the complete IVF query
     * path. Every corpus vector is assigned to its nearest centroid (its
     * "bucket", an EQUI-join key); each query vector probes its `nprobe`
-    * closest centroids and exact-scores ONLY the vectors assigned to those
-    * buckets. Candidate work per query is ~ |corpus|·nprobe/|centroids|
+    * closest centroids (a row-local top-n over the codebook) and
+    * exact-scores ONLY the vectors assigned to those buckets. Candidate work per query is ~ |corpus|·nprobe/|centroids|
     * instead of |corpus| — the sublinear ANN path — and the probe/bucket
     * match is a hash equi-join on the centroid id, never a nested loop over
     * the corpus. */
-  /** Nearest-quantized-centroid assignment — the ONE definition of the
-    * rounded-dot scoring + deterministic tiebreak shared by the in-memory
-    * search, the persisted index build, and the incremental append, which
-    * makes the pinned contract "an appended vector lands exactly where a
-    * rebuild would put it" structural rather than a convention kept in
-    * three copies. Returns (vec_id, bucket). */
-  private def assignToNearest(vs: DataFrame, cents: DataFrame): DataFrame =
-    vs.crossJoin(broadcast(cents))
-      .withColumn("score", round(dot(col("v"), col("cv")), 6))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_label"), struct(col("score"), -col("c_label")))
-        .as("bucket"))
-
   private[graft] def ivfTopk(s: SparkSession, d: String, nprobe: Int, k: Int): DataFrame = {
-    val vs = vectors(s, d)
-    val cents = centroidVectors(vs)
-    val assigned = assignToNearest(vs, cents)
-    val corpus = vs.join(assigned, Seq("vec_id"))
-    val q = vs.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("qscore").desc, col("c_label"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("qscore", round(dot(col("qv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("qv"), col("qn"), col("c_label").as("bucket"))
+    val vs = withCodebook(vectors(s, d))
+    val corpus = vs.select(col("vec_id"), col("v"), col("nrm"),
+      nearestCode(col("v"), col("cb")).as("bucket"))
+    val probes = vs.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
+        explode(probedCodes(col("v"), col("cb"), nprobe)).as("bucket"))
     val wk = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     probes.join(corpus, Seq("bucket"))
@@ -1313,62 +1347,44 @@ object SimilarityOps {
     * [[searchIvfIndex]] results are bit-identical to it — pinned by
     * IvfIndexSpec. */
   def buildIvfIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    // cut the vector frame: it feeds the centroid aggregation, the
-    // assignment, and the list join — uncut, each reference re-scans and
-    // re-normalizes the corpus
-    val vs = graft.PlanProbe.cut(vectors(s, d))
+    val vs = vectors(s, d)
     centroidVectors(vs).coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/centroids")
     // assign against the JUST-WRITTEN codebook (parquet round-trips doubles
-    // exactly): reusing the lazy centroid frame would re-execute the whole
-    // corpus-wide aggregation a second time inside the broadcast build —
-    // and reading the artifact is precisely what appendToIvfIndex and
-    // searchIvfIndex do, so build/append/search all score against the same
-    // bytes by construction
-    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
-    val lists = vs.join(assignToNearest(vs, cents), Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("bucket"))
+    // exactly), which is what appendToIvfIndex and searchIvfIndex read, so
+    // build/append/search all score against the same bytes by construction
+    val cb = persistedCodebook(s, indexDir)
+    val lists = vs.select(col("vec_id"), col("v"), col("nrm"),
+      nearestCode(col("v"), cb).as("bucket"))
     graft.sources.SourceOps.writePartitioned(lists, s"$indexDir/lists",
       Seq("bucket"))
   }
 
   /** Search the persisted index: each query vector probes its `nprobe`
-    * closest centroids (tiny broadcast codebook), and the probe set joins
-    * the inverted-list zone on the PARTITION column. The scan is pruned
-    * STATICALLY: the distinct probed-bucket set — bounded by the codebook
-    * size, i.e. the same thing we already broadcast — is collected and
-    * applied as an `isin` partition filter, so excluded `bucket=`
-    * directories are skipped at file-listing time, deterministically
-    * (dynamic partition pruning would make the same cut subject to runtime
-    * benefit heuristics; a ≤|codebook| driver collect is cheaper than the
-    * heuristic's own subquery and never falls back to a full scan). Pinned
-    * by IvfIndexSpec on the executed scan's numFiles. `queries` carries raw
-    * `(vec_id, embedding)` rows — the caller does not need the corpus
-    * loaded. */
+    * closest centroids, scored row-locally against the inlined codebook,
+    * and the probe set joins the inverted-list zone on the PARTITION
+    * column. The scan is pruned STATICALLY: the distinct probed-bucket set
+    * — bounded by the codebook size — is collected in one job and applied
+    * as an `isin` partition filter, so excluded `bucket=` directories are
+    * skipped at file-listing time, deterministically (dynamic partition
+    * pruning would make the same cut subject to runtime benefit
+    * heuristics). The probes are recomputed for the join rather than cut:
+    * they are a map over the queries, which must therefore be a
+    * deterministic frame. Pinned by IvfIndexSpec on the executed scan's
+    * numFiles. `queries` carries raw `(vec_id, embedding)`
+    * rows — the caller does not need the corpus loaded. */
   def searchIvfIndex(s: SparkSession, indexDir: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     graft.functions.VectorExprs.register(s)
-    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
-    val q = queries
+    val cb = persistedCodebook(s, indexDir)
+    val probes = queries
       .select(col("vec_id").as("q_id"),
         transform(col("embedding"), x => x.cast("double")).as("qv"))
       .withColumn("qn", norm(col("qv")))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("qscore").desc, col("c_label"))
-    // cut (localCheckpoint) the probe table: it feeds BOTH the eager
-    // distinct-bucket collect below and the final join — without the cut
-    // the queries×centroids scoring pass would execute twice per search.
-    // Lifetime: the checkpoint blocks are freed by the ContextCleaner once
-    // the returned frame becomes unreachable (localCheckpoint RDDs are
-    // GC-registered), so repeated searches in a long session stay bounded
-    // without an explicit free
-    val probes = graft.PlanProbe.cut(q.crossJoin(broadcast(cents))
-      .withColumn("qscore", round(dot(col("qv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("qv"), col("qn"), col("c_label").as("bucket")))
-    val probedBuckets = probes.select(col("bucket")).distinct()
-      .collect().map(_.get(0)) // bounded: at most |codebook| values
+      .withColumn("bucket", explode(probedCodes(col("qv"), cb, nprobe)))
+    val probedBuckets = probes.select(col("bucket")).as(Encoders.INT)
+      .mapPartitions(_.toSet.iterator)(Encoders.INT)
+      .collect().distinct // bounded: at most |codebook| values per partition
     val lists = graft.sources.SourceOps.readParquet(s, s"$indexDir/lists")
       .filter(col("bucket").isin(probedBuckets.toSeq: _*))
     val wk = Window.partitionBy(col("q_id"))
@@ -1378,6 +1394,8 @@ object SimilarityOps {
       .withColumn("cos",
         round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6))
       .select(col("q_id"), col("vec_id"), col("cos"))
+      // one exchange on q_id serves both the dedup aggregate and the rank
+      .repartition(col("q_id"))
       // collapse duplicate list entries (an at-least-once append retry can
       // land a vector twice): without this a duplicate would occupy two
       // ranks and evict the true k-th neighbor; duplicates carry identical
@@ -1392,27 +1410,25 @@ object SimilarityOps {
     * the PERSISTED codebook (frozen — appends never move centroids, the
     * standard IVF discipline: a moving codebook would silently invalidate
     * every existing list assignment) and append them into the partitioned
-    * list zone. Same rounded-dot scoring and deterministic tiebreak as the
-    * build, so an appended vector lands exactly where a rebuild would put
-    * it. Pre-routing by bucket keeps the append to ONE new file per touched
-    * bucket per batch; a long append history is reclaimed by the standard
-    * maintenance pass ([[graft.sources.SourceOps.compactPartitions]] over
-    * the lists zone). Rebuild the codebook when the corpus has drifted
-    * enough that bucket sizes skew (the build is the cheap part — it's one
-    * assignment pass). `newVectors` carries raw `(vec_id, embedding)`;
-    * vec_id uniqueness vs the existing index is the caller's contract
-    * (dedup is the ingest gate's job, upstream of indexing). */
+    * list zone. Same scorer as the build ([[nearestCode]]), so an appended
+    * vector lands exactly where a rebuild would put it. Pre-routing by
+    * bucket keeps the append to ONE new file per touched bucket per batch;
+    * a long append history is reclaimed by the standard maintenance pass
+    * ([[graft.sources.SourceOps.compactPartitions]] over the lists zone).
+    * Rebuild the codebook when the corpus has drifted enough that bucket
+    * sizes skew (the build is the cheap part — it's one assignment pass).
+    * `newVectors` carries raw `(vec_id, embedding)`; vec_id uniqueness vs
+    * the existing index is the caller's contract (dedup is the ingest
+    * gate's job, upstream of indexing). */
   def appendToIvfIndex(s: SparkSession, indexDir: String,
       newVectors: DataFrame): Unit = {
     graft.functions.VectorExprs.register(s)
-    val cents = graft.sources.SourceOps.readParquet(s, s"$indexDir/centroids")
-    val vs = newVectors
+    val cb = persistedCodebook(s, indexDir)
+    newVectors
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val buckets = assignToNearest(vs, cents)
-    vs.join(buckets, Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("bucket"))
+      .withColumn("bucket", nearestCode(col("v"), cb))
       .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$indexDir/lists")

@@ -245,14 +245,16 @@ object SourceOps {
     * compacting — the reclamation half of at-least-once append ingestion
     * (e.g. a retried index append landing a vector twice;
     * [[graft.streaming.EmbeddingStream]]): the zone comes out both
-    * one-file-per-partition AND exactly-once. Keeper among duplicates is
-    * arbitrary, which is only sound when duplicates are full-row identical
-    * (true for append retries of deterministic rows) — ENFORCED below: a
-    * caller whose key collides across DIFFERENT rows (say a re-embedded
-    * vec_id) fails loudly instead of keeping a nondeterministic row. The
-    * check is one extra aggregation over the slice being compacted — cost
-    * proportional to the compaction itself, the right price for turning
-    * silent nondeterminism into a named error on a maintenance pass. */
+    * one-file-per-partition AND exactly-once. Collapsing is only sound when
+    * duplicates are full-row identical (true for append retries of
+    * deterministic rows) — ENFORCED below: one aggregation per key takes
+    * the least and the greatest whole row, and a key whose two differ (say
+    * a re-embedded vec_id) fails loudly, before any write, instead of
+    * keeping a nondeterministic row. Rows compare as Spark orders them, so
+    * NaN equals NaN and -0.0 equals 0.0, as in a grouping; the least row
+    * is kept. The aggregation is the slice that gets written: the check
+    * reads its checkpoint once before the write, with no second aggregation
+    * or parquet read. */
   def compactPartitions(spark: SparkSession, dir: String,
       partitionCols: Seq[String],
       predicate: org.apache.spark.sql.Column,
@@ -277,18 +279,20 @@ object SourceOps {
     spark.conf.set(inferKey, "false")
     try {
       val slice0 = readParquet(spark, dir).filter(predicate)
-      val slice = (if (dedupKeys.nonEmpty) {
-        val conflicted = slice0
-          .groupBy(dedupKeys.map(slice0.col): _*)
-          .agg(countDistinct(struct(slice0.columns.map(slice0.col): _*))
-            .as("__variants"))
-          .filter(col("__variants") > 1).limit(1).count()
-        require(conflicted == 0L,
-          s"dedupKeys ${dedupKeys.mkString(",")} collide across non-identical " +
-            "rows — an arbitrary keeper would be nondeterministic; resolve the " +
-            "conflict upstream (dedup here only reclaims exact append retries)")
-        slice0.dropDuplicates(dedupKeys)
-      } else slice0).localCheckpoint()
+      val slice =
+        if (dedupKeys.isEmpty) slice0.localCheckpoint()
+        else {
+          val row = struct(slice0.columns.map(slice0.col): _*)
+          val span = slice0.groupBy(dedupKeys.map(slice0.col): _*)
+            .agg(min(row).as("__lo"), max(row).as("__hi"))
+            .select(col("__lo"), (col("__lo") <=> col("__hi")).as("__same"))
+            .localCheckpoint()
+          require(span.filter(!col("__same")).isEmpty,
+            s"dedupKeys ${dedupKeys.mkString(",")} collide across non-identical " +
+              "rows — an arbitrary keeper would be nondeterministic; resolve the " +
+              "conflict upstream (dedup here only reclaims exact append retries)")
+          span.select(slice0.columns.map(c => col("__lo").getField(c).as(c)): _*)
+        }
       overwritePartitions(slice, dir, partitionCols)
     } finally
       inferPrev.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _))

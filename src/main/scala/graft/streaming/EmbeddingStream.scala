@@ -14,10 +14,11 @@ import graft.sim.SimilarityOps
   * nightly rebuild.
   *
   * Mechanics: `foreachBatch` → [[SimilarityOps.appendToIvfIndex]] — each
-  * micro-batch is assigned against the FROZEN persisted codebook (broadcast;
-  * appends never move centroids) and lands as one file per touched
-  * `bucket=` partition. The assignment is a stateless map over the batch,
-  * so the stream holds zero aggregation state at any ingest rate.
+  * micro-batch is assigned against the FROZEN persisted codebook (inlined
+  * into the plan as a literal and scored row-locally; appends never move
+  * centroids) and lands as one file per touched `bucket=` partition. The
+  * assignment is a stateless map over the batch, so the stream holds zero
+  * aggregation state at any ingest rate.
   *
   * Delivery semantics: the checkpoint gives at-least-once `foreachBatch`
   * execution — a batch retried after a mid-append crash can double-append

@@ -10,9 +10,11 @@ import graft.sim.SimilarityOps
 /** Persisted IVF index lifecycle: build-once/query-many with the inverted
   * lists laid out as hive partitions, so a probe is a partition-pruned scan.
   * Pins (1) search-result equality with the in-memory IVF path — same
-  * arithmetic, same tiebreaks, bit-identical rows — and (2) the scale
+  * arithmetic, same tiebreaks, bit-identical rows — (2) the scale
   * property: a search's list scan reads only the probed bucket directories,
-  * via dynamic partition pruning on the executed plan. */
+  * via a static `isin` filter on the collected probed-bucket set, checked
+  * on the executed plan, and (3) the fixed per-call cost: the Spark jobs of
+  * a repeated search and of one append. */
 class IvfIndexSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
@@ -70,7 +72,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
     assert(listScans.nonEmpty, "expected a scan over the lists zone")
     val scan = listScans.head
     assert(scan.partitionFilters.nonEmpty,
-      s"probe join should dynamically prune the list scan:\n${res.queryExecution.executedPlan}")
+      s"the probed-bucket filter should prune the list scan:\n${res.queryExecution.executedPlan}")
     // one file per bucket (pinned above) → files read == buckets probed
     assert(scan.metrics("numFiles").value <= 3,
       s"expected <= nprobe files, got ${scan.metrics("numFiles").value}")
@@ -176,5 +178,127 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
         math.abs(top.getDouble(2) - 1.0) < 1e-6,
         s"streamed copy of $q should rank first at cos=1")
     }
+  }
+
+  test("a repeated search on an unchanged index runs 4 Spark jobs") {
+    // the codebook is collected once per centroids listing and the lists
+    // schema once per lists listing, so a repeat pays only the
+    // probed-bucket collect and the search itself
+    val one = Tables.embeddings(spark, dir).filter(col("vec_id") === 100)
+    def search() = SimilarityOps.searchIvfIndex(spark, indexDir, one,
+      nprobe = 3, k = 5).collect()
+    val first = search()
+    var again: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsDuring { again = search() }
+    assert(again.toSeq == first.toSeq)
+    assert(jobs == 4, s"a repeated search ran $jobs jobs")
+  }
+
+  test("one appendToIvfIndex runs 2 Spark jobs") {
+    val d = java.nio.file.Files.createTempDirectory("ivf_append_jobs").toString
+    SimilarityOps.buildIvfIndex(spark, dir, d)
+    val copies = Tables.embeddings(spark, dir)
+      .filter(col("vec_id").isin(100, 200))
+      .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
+    val jobs = jobsDuring(SimilarityOps.appendToIvfIndex(spark, d, copies))
+    assert(spark.read.parquet(s"$d/lists")
+      .filter(col("vec_id") >= 100000).count() == 2)
+    assert(jobs == 2, s"one append ran $jobs jobs")
+  }
+
+  test("equal-score centroids: assign and probe take the lower c_label") {
+    // a hand-made codebook: labels 5 and 3 hold the SAME vector, written
+    // higher label first, so only the tiebreak decides between them
+    val d = java.nio.file.Files.createTempDirectory("ivf_tie").toString
+    val session = spark
+    import session.implicits._
+    Seq((5, Seq(1.0, 0.0)), (3, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
+      .toDF("c_label", "cv").coalesce(1)
+      .write.mode("overwrite").parquet(s"$d/centroids")
+    val vecs = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    SimilarityOps.appendToIvfIndex(spark, d, vecs)
+    val buckets = spark.read.parquet(s"$d/lists")
+      .select(col("vec_id"), col("bucket")).as[(Long, Int)].collect().toMap
+    assert(buckets == Map(1L -> 3, 2L -> 1),
+      s"a tie must assign the lower c_label: $buckets")
+    // nprobe = 1 probes only the first-ranked centroid: the copy of vector
+    // 1 is found only if the tie ranks c_label 3 ahead of 5
+    val q = Seq((100L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val hits = SimilarityOps.searchIvfIndex(spark, d, q, nprobe = 1, k = 5)
+      .select(col("vec_id"), col("rk")).as[(Long, Int)].collect().toSeq
+    assert(hits == Seq((1L, 1)), s"a tie must probe the lower c_label: $hits")
+  }
+
+  test("index stream restarted from its checkpoint lands batch 2 once") {
+    import graft.streaming.EmbeddingStream
+    // arrival files: copies of corpus vectors under fresh ids, one file per
+    // batch
+    def arrival(ids: Seq[Int]): java.nio.file.Path = {
+      val out = java.nio.file.Files.createTempDirectory("emb_arrival")
+      Tables.embeddings(spark, dir)
+        .filter(col("vec_id").isin(ids: _*))
+        .select((col("vec_id") + 300000).as("vec_id"), col("embedding"),
+          col("label"))
+        .coalesce(1).write.mode("overwrite").parquet(out.toString)
+      val s = java.nio.file.Files.list(out)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.find(_.toString.endsWith(".parquet"))
+          .getOrElse(fail("no part file written"))
+      } finally s.close()
+    }
+    val batch1 = arrival(Seq(410, 420))
+    val batch2 = arrival(Seq(430, 440))
+    def fresh(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix)
+    def land(landing: java.nio.file.Path, name: String,
+        file: java.nio.file.Path): Unit =
+      java.nio.file.Files.copy(file, landing.resolve(name))
+    def start(index: String, landing: java.nio.file.Path, ckpt: String) =
+      EmbeddingStream.indexStream(
+        EmbeddingStream.readStream(spark, landing.toString), index, ckpt)
+
+    // restarted: stop after batch 1, land batch 2, restart on the same
+    // checkpoint
+    val restarted = fresh("ivf_restart").toString
+    SimilarityOps.buildIvfIndex(spark, dir, restarted)
+    val landingR = fresh("emb_restart_landing")
+    val ckptR = fresh("emb_restart_ckpt").toString
+    land(landingR, "batch1.parquet", batch1)
+    val q1 = start(restarted, landingR, ckptR)
+    try q1.processAllAvailable() finally q1.stop()
+    land(landingR, "batch2.parquet", batch2)
+    val q2 = start(restarted, landingR, ckptR)
+    try q2.processAllAvailable() finally q2.stop()
+
+    // uninterrupted: one stream sees both batches
+    val straight = fresh("ivf_straight").toString
+    SimilarityOps.buildIvfIndex(spark, dir, straight)
+    val landingS = fresh("emb_straight_landing")
+    land(landingS, "batch1.parquet", batch1)
+    val q3 = start(straight, landingS, fresh("emb_straight_ckpt").toString)
+    try {
+      q3.processAllAvailable()
+      land(landingS, "batch2.parquet", batch2)
+      q3.processAllAvailable()
+    } finally q3.stop()
+
+    val listsR = spark.read.parquet(s"$restarted/lists")
+    val listsS = spark.read.parquet(s"$straight/lists")
+    val cols = listsS.columns.toSeq.map(col)
+    assert(listsR.count() == listsS.count())
+    assert(listsR.select(cols: _*).exceptAll(listsS.select(cols: _*)).isEmpty &&
+      listsS.select(cols: _*).exceptAll(listsR.select(cols: _*)).isEmpty,
+      "restarted lists zone differs from the uninterrupted run")
+    assert(listsR.filter(col("vec_id") >= 300000).count() == 4)
+
+    val queries = Tables.embeddings(spark, dir)
+      .filter(col("vec_id").isin(410, 420, 430, 440))
+    def ranked(index: String) =
+      SimilarityOps.searchIvfIndex(spark, index, queries, nprobe = 3, k = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getInt(3))).sortBy(t => (t._1, t._4)).toSeq
+    assert(ranked(restarted) == ranked(straight))
   }
 }

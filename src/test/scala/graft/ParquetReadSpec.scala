@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,34 +49,6 @@ class ParquetReadSpec extends AnyFunSuite with SparkSuite {
     val viaPlain = intercept[Exception](plain(path))
     assert(viaHelper.getClass == viaPlain.getClass, path)
     assert(viaHelper.getMessage == viaPlain.getMessage, path)
-  }
-
-  /** Spark jobs started while `body` runs. Listener events arrive in post
-    * order, so once a marker job run after `body` has been seen, every job
-    * `body` started has been seen too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val phaseKey = "graft.test.phase"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty(phaseKey))
-          .getOrElse("none"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phaseKey, "body")
-      try body finally sc.setLocalProperty(phaseKey, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("marker"), "marker job never reached the listener")
-      seen.asScala.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(phaseKey, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("memoized schema equals the plain read on every corpus table") {

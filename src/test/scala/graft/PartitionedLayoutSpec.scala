@@ -142,6 +142,47 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkSuite {
     assert(spark.read.parquet(out).count() == 100)
   }
 
+  test("compactPartitions dedupKeys: NaN and signed-zero retries reclaim, " +
+      "a changed payload refuses before any write") {
+    val out = tmp("layout_dedup_float")
+    val session = spark
+    import session.implicits._
+    val rows = Seq(
+      (1L, "a", Double.NaN, Seq(Double.NaN, 1.0)),
+      (2L, "a", -0.0, Seq(-0.0, 2.0)),
+      (3L, "b", 0.0, Seq(0.0, Double.NaN)))
+    def land(rs: Seq[(Long, String, Double, Seq[Double])]): Unit =
+      rs.toDF("id", "part", "x", "v")
+        .write.mode("append").partitionBy("part").parquet(out)
+    land(rows)
+    land(rows) // an exact retry: the same bits, NaN included
+    // a retry whose zeros carry the other sign: equal values, as grouping
+    // compares doubles
+    land(rows.map { case (i, p, x, v) =>
+      (i, p, if (x == 0.0) -x else x, v.map(e => if (e == 0.0) -e else e)) })
+    assert(spark.read.parquet(out).count() == 9)
+    SourceOps.compactPartitions(spark, out, Seq("part"), lit(true),
+      dedupKeys = Seq("id"))
+    val kept = spark.read.parquet(out)
+      .select(col("id"), col("x"), col("v")).as[(Long, Double, Seq[Double])]
+      .collect().sortBy(_._1).toSeq
+    assert(kept.map(_._1) == Seq(1L, 2L, 3L), s"one row per id: $kept")
+    assert(kept(0)._2.isNaN && kept(0)._3.head.isNaN)
+    assert(kept(1)._2 == 0.0 && kept(1)._3 == Seq(0.0, 2.0))
+    assert(kept(2)._2 == 0.0 && kept(2)._3(1).isNaN)
+
+    // same id, different payload: refused, and nothing is rewritten
+    land(Seq((2L, "a", 0.5, Seq(0.5, 2.0))))
+    val files = parquetFiles(out).map(_.toString).sorted
+    val e = intercept[IllegalArgumentException](
+      SourceOps.compactPartitions(spark, out, Seq("part"), lit(true),
+        dedupKeys = Seq("id")))
+    assert(e.getMessage.contains("non-identical"))
+    assert(parquetFiles(out).map(_.toString).sorted == files,
+      "a refused compaction must not touch the zone")
+    assert(spark.read.parquet(out).count() == 4)
+  }
+
   test("compactPartitions refuses a streaming file-sink zone") {
     val out = tmp("layout_compact_stream")
     java.nio.file.Files.createDirectory(

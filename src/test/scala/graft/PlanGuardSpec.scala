@@ -49,9 +49,7 @@ class PlanGuardSpec extends AnyFunSuite with SparkSuite {
     "q_smooth_kernel",         // finite kernel offsets (≤ 9 rows)
     "q_ml_kmeans_ivf",         // k≈n/16 broadcast centroids (scale-adaptive)
     "q_embed_centroids",       // 10 label-centroids (confusion report)
-    "q_embed_ivf_assign",      // same label-centroid set
-    "q_embed_ivf_search",      // 10 broadcast centroids (probe stage)
-    "q_embed_ivf_recall",      // centroids + sampled brute-force query slice
+    "q_embed_ivf_recall",      // sampled brute-force query slice, broadcast
     "q_embed_neardup_ivf",     // hierarchical quantizer: the ONLY vector
                                // broadcast is the O(√n) super set (plus
                                // singleton stats); fine scoring and the
