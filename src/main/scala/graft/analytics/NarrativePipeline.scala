@@ -62,15 +62,13 @@ import graft.label.Labeler
   *
   * Scale shape: ONE corpus scan feeds ONE (source × week × label) hash
   * aggregate (map-side partial, ≤ |sources|·|weeks|·|labels| rows at any
-  * corpus size); the pivot is LINEAGE-CUT (round 17) so every later stage
-  * reads the materialized ~1k-row frame — the r15 assumption that
-  * ReusedExchange would dedup the pivot across its consumers was refuted
-  * by an executed-plan dump at ×10 (seven distinct lineitem⋈orders
-  * SortMergeJoins in one action; only scan-side exchanges reuse), and the
-  * cut measured 2.5× faster there (`tools/CutProbe q_narrative_pipeline`, BASELINE.md
-  * round 17). Windows, scaffolds, peak sets, and the lag cross join are
-  * all driver-negligible with broadcast merges. Nothing shuffles the
-  * corpus but the one groupBy — now enforced by the cut rather than
+  * corpus size), and the pivot is LINEAGE-CUT so every later stage reads
+  * the materialized ~1k-row frame. ReusedExchange does not dedup the pivot
+  * across its seven consumers (only scan-side exchanges reuse), so uncut
+  * each consumer re-executes the lineitem⋈orders join (BASELINE.md,
+  * narrative pivot cut). Windows, scaffolds, peak sets, and the lag cross
+  * join are all driver-negligible with broadcast merges. Nothing shuffles
+  * the corpus but the one groupBy — enforced by the cut rather than
   * assumed of the optimizer.
   *
   * Release invariant (InvariantCheck + the oracle's TRUE pin): per-source
@@ -128,24 +126,12 @@ object NarrativePipeline {
     round(taps.map(_._1).reduce(_ + _) / taps.map(_._2).reduce(_ + _), 6)
   }
 
-  /** The gated pipeline frame. `cut = true` lineage-cuts the (source,
-    * week, label) pivot — a DIMENSION-BOUNDED frame (≤ |sources|·|weeks|·
-    * |labels| ≈ 1k rows at any corpus size), so unlike election's rejected
-    * corpus-fraction cut this materialization cannot grow with the corpus.
-    * The r15 note ("ReusedExchange dedups the pivot, a cut is a wash at
-    * sf0.1") was HALF wrong: a round-17 executed-plan dump at the ×10
-    * blowup shows reuse does NOT engage across the pivot's seven
-    * consumers — SEVEN distinct lineitem⋈orders SortMergeJoins execute in
-    * one action (only the scan-side exchanges dedup). The wash at sf0.1 is
-    * real (fixed costs dominate there); at blowup scale the 7× fact join
-    * dominates and the cut wins — measured crossover in BASELINE.md round
-    * 17, which sets the registered default below. */
-  private[graft] def pipelineFrame(s: SparkSession, d: String,
-      cut: Boolean): DataFrame = {
-      // stage 1+2: one scan → the per-label weekly pivot (knob above).
-      val base =
-        if (cut) graft.PlanProbe.cut(labelPivot(s, d))
-        else labelPivot(s, d)
+  /** The gated pipeline frame. The (source, week, label) pivot is cut: it
+    * is DIMENSION-BOUNDED (≤ |sources|·|weeks|·|labels| ≈ 1k rows at any
+    * corpus size), so the materialization cannot grow with the corpus. */
+  private def pipelineFrame(s: SparkSession, d: String): DataFrame = {
+      // stage 1+2: one scan → the per-label weekly pivot
+      val base = graft.PlanProbe.cut(labelPivot(s, d))
       // per-source weekly counts = the pivot summed over labels
       val weekly = base.groupBy(col("source_type"), col("wk"))
         .agg(sum(col("lcnt")).as("cnt"))
@@ -231,7 +217,7 @@ object NarrativePipeline {
 
   private val qNarrativePipeline = Q(
     "q_narrative_pipeline",
-    (s, d) => pipelineFrame(s, d, cut = true),
+    pipelineFrame,
     Some {
       // every Scala-side name reaches the SQL through sqlLit — the display
       // names contain spaces today and could contain quotes tomorrow; one

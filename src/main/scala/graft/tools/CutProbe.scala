@@ -2,25 +2,19 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Interleaved A/B of the shape knobs behind the lineage-cut decisions: each
-  * shape builds one query's frame with its knob off (arm A) and on (arm B).
-  *
-  *  - `q_election_pipeline` (`oneScan`): two pruned passes vs one labeled
-  *    full-relation scan (decision recorded in ElectionPipeline).
-  *  - `q_narrative_pipeline` (`cut`): the (source, week, label) pivot feeds
-  *    seven consumers, so without the cut each re-executes the fact join.
-  *  - `q_scaffold_month_entity`, `q_exposure_panel`, `q_semi_membership`,
-  *    `q_anti_membership`, `q_board_pipeline` (`cut`): a checkpoint of a
-  *    dimension-bounded frame vs 1-2 extra pruned corpus passes; the
-  *    crossover is what `Tables.beyondCutCrossover` gates on.
+/** Interleaved A/B of the size-gated lineage cuts: each shape builds one
+  * query's frame uncut (arm A) and cut (arm B). The five shapes —
+  * `q_scaffold_month_entity`, `q_exposure_panel`, `q_semi_membership`,
+  * `q_anti_membership`, `q_board_pipeline` — each checkpoint a
+  * dimension-bounded frame vs 1-2 extra pruned corpus passes; the
+  * crossover is what `Tables.beyondCutCrossover` gates on.
   *
   * Protocol: one discarded warm-up of arm A, then `rounds` rounds of A B, so
   * contention drift hits both arms equally; every round's rows, both arms,
   * must equal the first A round's (exit 1 otherwise). Prints every sample
-  * and each arm's best. With `factor > 1` the probe measures a
-  * [[PipelineScaleStress.blowUpFacts]] uniform blowup (facts ×factor, dims
-  * verbatim) made in a temp dir and deleted afterwards. `shapes` is a
-  * comma-separated subset of the names above (default: all).
+  * and each arm's best. With `factor > 1` the probe measures a uniform
+  * [[Blowup.corpus]] made in a temp dir and deleted afterwards. `shapes` is
+  * a comma-separated subset of the names above (default: all).
   *
   * {{{
   * spark-submit --master 'local[32]' --driver-memory 16g \
@@ -29,22 +23,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 object CutProbe {
 
-  /** (shape, knob, frame builder taking the knob's value). */
+  /** (shape, frame builder taking the cut switch). */
   private val shapes
-      : Seq[(String, String, (SparkSession, String, Boolean) => DataFrame)] =
-    Seq(
-      ("q_election_pipeline", "oneScan",
-        graft.analytics.ElectionPipeline.pipelineFrame),
-      ("q_narrative_pipeline", "cut",
-        graft.analytics.NarrativePipeline.pipelineFrame),
-      ("q_scaffold_month_entity", "cut",
-        graft.analytics.TimeSeriesOps.scaffoldFrame),
-      ("q_exposure_panel", "cut", graft.analytics.Baskets.exposurePanelFrame),
-      ("q_semi_membership", "cut",
-        graft.analytics.Baskets.semiMembershipFrame),
-      ("q_anti_membership", "cut",
-        graft.analytics.Baskets.antiMembershipFrame),
-      ("q_board_pipeline", "cut", graft.analytics.BoardPipeline.pipelineFrame))
+      : Seq[(String, (SparkSession, String, Boolean) => DataFrame)] = Seq(
+    ("q_scaffold_month_entity", graft.analytics.TimeSeriesOps.scaffoldFrame),
+    ("q_exposure_panel", graft.analytics.Baskets.exposurePanelFrame),
+    ("q_semi_membership", graft.analytics.Baskets.semiMembershipFrame),
+    ("q_anti_membership", graft.analytics.Baskets.antiMembershipFrame),
+    ("q_board_pipeline", graft.analytics.BoardPipeline.pipelineFrame))
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
@@ -61,47 +47,38 @@ object CutProbe {
     }
     val spark = graft.Session()
 
-    val (dir, generated) =
-      if (factor <= 1) (srcDir, None)
-      else {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_cut_probe").toString
-        PipelineScaleStress.blowUpFacts(spark, srcDir, out, factor)
-        println(s"[cutprobe] blowup ready: $srcDir ×$factor → $out")
-        (out, Some(out))
+    // every shape runs, even after a mismatch
+    def probe(dir: String): Boolean = picked.map { case (name, mk) =>
+      def run(cut: Boolean) = {
+        val t0 = System.nanoTime()
+        val rows = mk(spark, dir, cut).collect()
+        graft.PlanProbe.releaseCuts()
+        ((System.nanoTime() - t0) / 1e9, rows)
       }
+      run(cut = false) // warm-up, discarded
+      val (off, on) = (1 to rounds).map { _ =>
+        (run(cut = false), run(cut = true))
+      }.unzip
+      def sorted(rows: Array[Row]) = rows.map(_.toString).sorted
+      val expected = sorted(off.head._2)
+      val eq = (off ++ on).forall(r => sorted(r._2).sameElements(expected))
+      def fmt(ts: Seq[(Double, Array[Row])]) =
+        s"[${ts.map(t => f"${t._1}%.3f").mkString(",")}] " +
+          f"best=${ts.map(_._1).min}%.3f"
+      println(f"[cutprobe] $name%-26s ×$factor%-3d values_equal=$eq " +
+        s"cut=false:${fmt(off)} cut=true:${fmt(on)}")
+      eq
+    }.forall(identity)
 
-    var anyMismatch = false
-    try {
-      picked.foreach { case (name, knob, mk) =>
-        def run(on: Boolean) = {
-          val t0 = System.nanoTime()
-          val rows = mk(spark, dir, on).collect()
-          graft.PlanProbe.releaseCuts()
-          ((System.nanoTime() - t0) / 1e9, rows)
+    val allEqual =
+      try {
+        if (factor <= 1) probe(srcDir)
+        else Blowup.inDir(None, "graft_cut_probe") { out =>
+          Blowup.corpus(spark, srcDir, factor, out)
+          println(s"[cutprobe] blowup ready: $srcDir ×$factor → $out")
+          probe(out)
         }
-        run(on = false) // warm-up, discarded
-        val (off, on) = (1 to rounds).map { _ =>
-          (run(on = false), run(on = true))
-        }.unzip
-        def sorted(rows: Array[Row]) = rows.map(_.toString).sorted
-        val expected = sorted(off.head._2)
-        val eq = (off ++ on).forall(r => sorted(r._2).sameElements(expected))
-        if (!eq) anyMismatch = true
-        def fmt(ts: Seq[(Double, Array[Row])]) =
-          s"[${ts.map(t => f"${t._1}%.3f").mkString(",")}] " +
-            f"best=${ts.map(_._1).min}%.3f"
-        println(f"[cutprobe] $name%-26s ×$factor%-3d values_equal=$eq " +
-          s"$knob=false:${fmt(off)} $knob=true:${fmt(on)}")
-      }
-    } finally {
-      spark.stop()
-      generated.foreach { out =>
-        import scala.sys.process._
-        Seq("rm", "-rf", out).!
-        println(s"[cutprobe] cleaned generated blowup dir $out")
-      }
-    }
-    if (anyMismatch) sys.exit(1)
+      } finally spark.stop()
+    if (!allEqual) sys.exit(1)
   }
 }

@@ -39,36 +39,23 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *    lands at ~factor² and trips the bound immediately, while the 3×
   *    slack absorbs VM noise and per-stage constants.
   *
-  * Blowup construction (pure function of (orderkey, copy) — no RNG,
-  * bit-for-bit reproducible): the corpus FACTS replicate — copy k of
-  * orders/lineitem remaps `o_orderkey → o_orderkey·factor + k` (copy 0 is
-  * the source verbatim under the same remap) — while every dimension
-  * (region/nation/customer/supplier/part/documents) ships verbatim. That
-  * is the 100 TB shape: document volume grows `factor`×, the entity
-  * universe, date range, and text corpus stay fixed, so scaffold
-  * dimensions are constant and per-entity/per-week densities rise. Chunk
-  * text assignment (`pmod(okey·7 + line, |docs|)`) lands each copy on a
-  * different document, so labels and topics vary per copy instead of
-  * shipping `factor` identical shards.
+  * The corpus is [[Blowup.corpus]]'s: facts, documents and embeddings
+  * multiply while the entity universe and date range stay fixed, so
+  * scaffold dimensions are constant and per-entity/per-week densities
+  * rise. Chunk text assignment (`pmod(okey·7 + line, |docs|)`) lands each
+  * copy on a different document, so labels and topics vary per copy
+  * instead of shipping `factor` identical shards.
   *
-  * '''Hot-key SKEW mode''' (round 17 — the one scale-killer class the
-  * uniform remap cannot exhibit): with `skewPct = p > 0`, a deterministic
-  * p% slice of the multiplied fact rows (selected per (orderkey, copy) by
-  * `pmod(okey·7919 + copy, 100) < p` — whole orders route together, so
-  * sentence grouping stays coherent) is re-keyed onto ONE hot orderkey
-  * (= ONE hot `document_id`, since `document_id = o_orderkey`), and a
-  * DISJOINT p% slice keeps its orderkey but routes `l_suppkey` onto ONE
-  * hot supplier (= ONE hot `entity_name` spread across the full date
-  * range). The orders side keeps every remapped copy (orphaned orders are
-  * invisible to the inner fact join) and gains exactly one hot order row,
-  * so the lineitem⋈orders join stays 1:N — the corpus concentrates on a
-  * hot key WITHOUT a quadratic join blowup, which is precisely the 100 TB
-  * failure shape (one viral document / one mega-entity holding a double-
-  * digit corpus fraction). The skew sweep re-pins, per skew-sensitive
-  * lifecycle (market, election, board, network, report — the doc-grain
-  * flag join, the (mode, document) winners, the un-hinted (entity, day)
-  * merge, both labeledSearch arms, and report's entity-keyed
-  * countDistinct aggregates):
+  * '''Hot-key SKEW mode''' — the scale-killer class a uniform remap cannot
+  * exhibit: with `skewPct = p > 0` the corpus routes a p% slice of the
+  * facts onto ONE hot document and a disjoint p% slice onto ONE hot entity
+  * at the same n, and the fact join stays 1:N ([[Blowup.corpus]]) — one
+  * viral document / one mega-entity holding a double-digit corpus
+  * fraction, without a quadratic join. The skew sweep re-pins, per
+  * skew-sensitive lifecycle (market, election, board, network, report —
+  * the doc-grain flag join, the (mode, document) winners, the un-hinted
+  * (entity, day) merge, both labeledSearch arms, and report's
+  * entity-keyed countDistinct aggregates):
   *
   *  - identities green (same shared invariant list as the release gate);
   *  - plan shape clean (CART=0, no off-fact-key SMJ — same parser);
@@ -81,12 +68,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *  - wall time within [[SkewWallFactor]]× of the UNIFORM blowup at the
   *    same n, timed in the same session.
   *
-  * Also measured (recorded, not gated): the ElectionPipeline S8 one-scan
-  * knob ([[graft.analytics.ElectionPipeline.pipelineFrame]] `oneScan`) at
-  * both operating points, with a driver-side row-equality pin against the
-  * two-pass shape — the documented 100 TB trade (checkpoint the kept
-  * slice vs scan twice) becomes a measurement instead of a note.
-  *
   * {{{
   * spark-submit --master 'local[32]' --driver-memory 16g \
   *   --class graft.tools.PipelineScaleStress <jar> \
@@ -98,20 +79,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object PipelineScaleStress {
 
-  private val Dims =
-    Seq("region", "nation", "customer", "supplier", "part", "documents")
-
   private val Pipelines = Seq("q_market_pipeline", "q_screener_pipeline",
     "q_report_pipeline", "q_narrative_pipeline", "q_election_pipeline",
     "q_board_pipeline", "q_network_pipeline")
 
   /** The lifecycles whose shuffles key on the skewed columns (document_id
-    * via orderkey; entity_name via suppkey). Report joined the list in
-    * round 17: its three corpus-frame aggregates are
-    * countDistinct(document_id) grouped by ENTITY-keyed group keys — the
-    * same exchange shape (group keys alone partition the distinct stream)
-    * that serialized election's hot entity before its dedup-then-count
-    * spread, so it must be measured, not presumed absorbed. */
+    * via orderkey; entity_name via suppkey). Report's three corpus-frame
+    * aggregates are countDistinct(document_id) grouped by ENTITY-keyed
+    * group keys — the same exchange shape (group keys alone partition the
+    * distinct stream) that serialized election's hot entity before its
+    * dedup-then-count spread, so it must be measured, not presumed
+    * absorbed. */
   private val SkewPipelines = Seq("q_market_pipeline", "q_election_pipeline",
     "q_board_pipeline", "q_network_pipeline", "q_report_pipeline")
 
@@ -133,10 +111,10 @@ object PipelineScaleStress {
   /** Skew-run wall-time bound, relative to the uniform blowup at the same
     * n in the same session. 2× is the design target (the brief's "within
     * ~2× of the uniform blowup"); 2.5 is the pinned gate — election's
-    * blowup walls have swung ±30% across clean sessions (BASELINE.md r16
-    * A/B table), so a 2.0 pin would flake on noise the design can't
-    * remove. A hot key that actually serializes a stage lands at ≥ 4-8×
-    * and trips 2.5 just as decisively. */
+    * blowup walls swing ±30% across clean sessions (BASELINE.md), so a
+    * 2.0 pin would flake on noise the design can't remove. A hot key that
+    * actually serializes a stage lands at ≥ 4-8× and trips 2.5 just as
+    * decisively. */
   val SkewWallFactor = 2.5
 
   /** Max/median task-duration bound per stage (stages with ≥ 8 tasks) when
@@ -161,86 +139,14 @@ object PipelineScaleStress {
     * pipeline's wall time. */
   val StragglerMaterialShare = 0.20
 
-  /** Deterministic fact blowup of `srcDir` into `outDir`: orders/lineitem
-    * ×`factor` with the orderkey remap, dimensions verbatim. With
-    * `skewPct > 0`, additionally routes a skewPct% slice of the multiplied
-    * lineitem rows onto hot orderkey 1 (one hot document) and a disjoint
-    * skewPct% slice onto hot suppkey 1 (one hot entity); orders gains the
-    * single hot order row (scaladoc above). Hot key 1 cannot collide with
-    * the remap image (`k·factor + j ≥ factor ≥ 2` for source keys ≥ 1). */
-  def blowUpFacts(spark: SparkSession, srcDir: String, outDir: String,
-      factor: Int, skewPct: Int = 0): Unit = {
-    require(skewPct >= 0 && skewPct <= 50, "skewPct ∈ [0, 50] (two slices)")
-    val HotOrder = 1L
-    val HotSupp = 1L
-    def sel(key: String, k: Int) = pmod(col(key) * 7919 + lit(k), lit(100))
-    def copies(src: DataFrame, key: String): DataFrame =
-      (0 until factor).map { k =>
-        val remapped = src.withColumn(key, col(key) * factor + k)
-        if (skewPct == 0) remapped
-        else {
-          // selection reads the REMAPPED key, which both fact tables derive
-          // identically from (source key, copy) — so an order and all of its
-          // lineitems route together, and the two tables always agree
-          val s = sel(key, k)
-          val docSkewed = remapped.withColumn(key,
-            when(s < skewPct, lit(HotOrder)).otherwise(col(key)))
-          if (key == "l_orderkey")
-            docSkewed.withColumn("l_suppkey",
-              when(s >= skewPct && s < 2 * skewPct, lit(HotSupp))
-                .otherwise(col("l_suppkey")))
-          else docSkewed
-        }
-      }.reduce(_ union _)
-    val orders = spark.read.parquet(s"$srcDir/orders.parquet")
-    val ordersOut =
-      if (skewPct == 0) copies(orders, "o_orderkey")
-      else {
-        // the copies whose children routed hot are dropped (a whole
-        // (order, copy) routes together, so no children are orphaned) and
-        // replaced by exactly ONE hot order row, built from the smallest
-        // source order (deterministic) — the doc-skewed lineitem slice must
-        // join 1:N, never N:M
-        val minKey = orders.agg(min(col("o_orderkey"))).head().getLong(0)
-        val hot = orders.filter(col("o_orderkey") === minKey)
-          .withColumn("o_orderkey", lit(1L))
-        copies(orders, "o_orderkey")
-          .filter(col("o_orderkey") =!= 1L) // drop the hot-routed copies
-          .union(hot)
-      }
-    ordersOut
-      .repartition(col("o_orderkey"))
-      .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    val lineitem = spark.read.parquet(s"$srcDir/lineitem.parquet")
-    val liCopies = copies(lineitem, "l_orderkey")
-    // Uniform mode clusters by orderkey (the established layout). Skew
-    // mode must NOT: hash-clustering routes the whole hot key into one
-    // ~33 MB file — UNDER maxPartitionBytes, so one scan task would carry
-    // 30% of the corpus through the entire map chain, a pure probe
-    // artifact (at 100 TB a hot document's bytes dwarf a 128 MB scan
-    // split, so byte-based splitting always parallelizes the map side).
-    // Spreading by (key, partkey, linenumber) keeps the write
-    // deterministic while landing the hot key across many files, the way
-    // any real multi-writer ingest would.
-    (if (skewPct == 0) liCopies.repartition(col("l_orderkey"))
-     else liCopies.repartition(col("l_orderkey"), col("l_partkey"),
-       col("l_linenumber")))
-      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    Dims.foreach { t =>
-      spark.read.parquet(s"$srcDir/$t.parquet")
-        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-    }
-  }
-
   /** Best-of-2 wall time of a full collect+render run; returns the LAST
     * run's (rows, plan, schema) so identity/plan checks read what was
     * timed — re-building some pipelines just for `.schema` would re-pay
-    * their eager construction stages (cuts, the layout collect). */
-  /** `beforeLast` runs between the two passes — the skew sweep uses it to
+    * their eager construction stages (cuts, the layout collect).
+    * `beforeLast` runs between the two passes — the skew sweep uses it to
     * reset the task listener so straggler stats cover ONLY the warm run
-    * whose rows/plan are returned (the cold pass's page-cache-bound tasks
-    * otherwise masquerade as stragglers: a first-read 11 s scan task was
-    * measured against a 6 s warm wall before this hook existed). */
+    * whose rows/plan are returned (the cold pass's page-cache-bound scan
+    * tasks otherwise masquerade as stragglers). */
   private def timed(mk: => DataFrame, beforeLast: () => Unit = () => ())
       : (Double, Array[Row], String, org.apache.spark.sql.types.StructType) = {
     def once(): (Double, Array[Row], String,
@@ -354,24 +260,13 @@ object PipelineScaleStress {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val givenOut = args.lift(2).filter(_.nonEmpty) // "" = positional skip
     val skewPct = args.lift(3).map(_.toInt).getOrElse(0)
-    val outDir = givenOut.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_pipe_stress").toString)
     val spark = graft.Session()
 
     val allFailures =
-      try {
+      try Blowup.inDir(givenOut, "graft_pipe_stress") { outDir =>
         if (skewPct > 0) runSkewSweep(spark, srcDir, outDir, factor, skewPct)
         else runUniformSweep(spark, srcDir, outDir, factor)
-      } finally {
-        spark.stop()
-        // a blowup at ×25/×50 is multiple GB — never leave it behind when
-        // the tool owns the directory (caller-supplied dirs are theirs)
-        if (givenOut.isEmpty) {
-          import scala.sys.process._
-          Seq("rm", "-rf", outDir).!
-          println(s"[pipestress] cleaned generated blowup dir $outDir")
-        }
-      }
+      } finally spark.stop()
     if (allFailures.nonEmpty) {
       allFailures.foreach(f => System.err.println(s"[pipestress] FAIL $f"))
       sys.exit(1)
@@ -381,7 +276,7 @@ object PipelineScaleStress {
   /** The release sweep: all seven lifecycles at base + uniform blowup. */
   private def runUniformSweep(spark: SparkSession, srcDir: String,
       outDir: String, factor: Int): Seq[String] = {
-    blowUpFacts(spark, srcDir, outDir, factor)
+    Blowup.corpus(spark, srcDir, factor, outDir)
     val n = spark.read.parquet(s"$outDir/lineitem.parquet").count()
     val nBase = spark.read.parquet(s"$srcDir/lineitem.parquet").count()
     println(s"[pipestress] blowup ready: $srcDir ×$factor → $outDir " +
@@ -420,48 +315,7 @@ object PipelineScaleStress {
 
     val armFailures = auditSearchArms(spark, outDir, s"×$factor")
 
-    // S8 shape A/B (recorded, not gated on time — CutProbe owns
-    // the interleaved decision measurement): time BOTH pipelineFrame
-    // shapes explicitly, whatever the registered default is, and PIN their
-    // row equality at the blowup — the knob must never change values
-    val electionKnobFailures: Seq[String] =
-      if (!pipelines.contains("q_election_pipeline")) Nil
-      else try {
-        def sortKey(r: Row) = r.toSeq.map(String.valueOf).mkString("|")
-        val E = graft.analytics.ElectionPipeline
-        val (t2Base, _, _, _) =
-          timed(E.pipelineFrame(spark, srcDir, oneScan = false))
-        val (t2Big, twoRows, _, _) =
-          timed(E.pipelineFrame(spark, outDir, oneScan = false))
-        val (t1Base, _, _, _) =
-          timed(E.pipelineFrame(spark, srcDir, oneScan = true))
-        val (t1Big, oneRows, _, _) =
-          timed(E.pipelineFrame(spark, outDir, oneScan = true))
-        println(f"[pipestress] election S8 A/B: two-pass base=$t2Base%.2fs " +
-          f"×$factor=$t2Big%.2fs; one-scan base=$t1Base%.2fs " +
-          f"×$factor=$t1Big%.2fs")
-        if (oneRows.map(sortKey).sorted.sameElements(
-            twoRows.map(sortKey).sorted)) Nil
-        else Seq(s"election one-scan knob changed VALUES at ×$factor " +
-          s"(${oneRows.length} vs ${twoRows.length} rows)")
-      } catch {
-        // The A/B is a RECORDED probe of the rejected-vs-registered shapes,
-        // not a gate: the registered two-pass shape already ran (and was
-        // gated) in the main sweep above. An arm exceeding the session's
-        // memory envelope at an extreme factor is itself a measurement —
-        // the first observed instance was the one-scan arm's corpus-
-        // fraction checkpoint OOMing at ×100 under a 24g heap while
-        // two-pass completed — so it is reported loudly but does not fail
-        // a sweep whose own pins all held.
-        case e: Throwable =>
-          graft.PlanProbe.releaseCuts()
-          println(s"[pipestress] election S8 A/B DID NOT COMPLETE at " +
-            s"×$factor — recorded as an operating-envelope result, not a " +
-            s"sweep failure: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          Nil
-      }
-
-    val out = failures ++ armFailures ++ electionKnobFailures
+    val out = failures ++ armFailures
     if (out.isEmpty)
       println(s"[pipestress] all ${pipelines.size} composed-lifecycle " +
         s"scale pins hold at ×$factor (n=$n chunks)")
@@ -486,13 +340,13 @@ object PipelineScaleStress {
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     val uniDir = s"$outDir/uniform"
     val skewDir = s"$outDir/skew"
-    blowUpFacts(spark, srcDir, uniDir, factor)
-    blowUpFacts(spark, srcDir, skewDir, factor, skewPct)
+    Blowup.corpus(spark, srcDir, factor, uniDir)
+    Blowup.corpus(spark, srcDir, factor, skewDir, skewPct)
     val n = spark.read.parquet(s"$skewDir/lineitem.parquet").count()
     val hot = spark.read.parquet(s"$skewDir/lineitem.parquet")
-      .filter(col("l_orderkey") === 1L).count()
+      .filter(col("l_orderkey") === Blowup.HotOrder).count()
     val hotEnt = spark.read.parquet(s"$skewDir/lineitem.parquet")
-      .filter(col("l_suppkey") === 1L).count()
+      .filter(col("l_suppkey") === Blowup.HotSupp).count()
     println(f"[pipestress] skew blowup ready: ×$factor skew=$skewPct%% → " +
       f"$skewDir (n=$n, hot-doc rows=$hot = ${100.0 * hot / n}%.1f%%, " +
       f"hot-entity rows=$hotEnt = ${100.0 * hotEnt / n}%.1f%%)")

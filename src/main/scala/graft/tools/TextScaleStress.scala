@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Larger-operating-point stress for the TEXT near-dup family — the
@@ -12,13 +12,10 @@ import org.apache.spark.sql.functions._
   * sketches still find near-dups" into measured evidence at a scale the
   * checked-in testdata never reaches.
   *
-  * Blowup construction (pure function of (doc_id, copy, word index) — no
-  * RNG, reproducible bit-for-bit): copy 0 is the source verbatim (ids
-  * remapped to `doc_id·factor`), copy k drops ~5% of the source's words
-  * via the classic fract(sin·const) hash. Each surviving 3-word shingle
-  * overlap leaves copy↔source Jaccard ≈ 0.8 and copy↔copy ≈ 0.65 — real
-  * near-dup structure, so every source with enough words contributes
-  * `factor·(factor−1)/2` ground-truth duplicate pairs.
+  * The corpus is [[Blowup.corpus]]'s: each source document's copies drop
+  * ~5% of its words, so copy↔source Jaccard ≈ 0.8 and copy↔copy ≈ 0.65 —
+  * real near-dup structure, with `factor·(factor−1)/2` ground-truth
+  * duplicate pairs per source with enough words.
   *
   * Three pins at the blown-up corpus:
   *
@@ -47,31 +44,6 @@ import org.apache.spark.sql.functions._
   * }}}
   */
 object TextScaleStress {
-
-  /** Deterministic word-drop blowup of `srcDir/documents.parquet` into
-    * `outDir/documents.parquet` with `factor`× the rows. */
-  def blowUpDocs(spark: SparkSession, srcDir: String, outDir: String,
-      factor: Int): Unit = {
-    val src = spark.read.parquet(s"$srcDir/documents.parquet")
-    def copy(k: Int): DataFrame =
-      if (k == 0)
-        src.select((col("doc_id") * factor).as("doc_id"), col("text"),
-          col("lang"), col("source"), col("n_chars"))
-      else {
-        val dropped = expr(
-          s"""array_join(filter(split(text, '\\\\s+'), (w, i) ->
-             |  sin(doc_id * 12.9898 + $k * 78.233 + i * 0.37719)
-             |    * 43758.5453
-             |  - floor(sin(doc_id * 12.9898 + $k * 78.233 + i * 0.37719)
-             |          * 43758.5453) >= 0.05), ' ')""".stripMargin)
-        src.select((col("doc_id") * factor + k).as("doc_id"),
-            dropped.as("text"), col("lang"), col("source"))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-      }
-    (0 until factor).map(copy).reduce(_ union _)
-      .repartition(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-  }
 
   /** Ground-truth cluster recall of the MinHash band candidates; also
     * returns the measured numbers for the curve record. Candidates come
@@ -186,26 +158,24 @@ object TextScaleStress {
   def main(args: Array[String]): Unit = {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outDir = args.lift(2).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_text_stress").toString)
     val spark = graft.Session()
-
-    blowUpDocs(spark, srcDir, outDir, factor)
-    val n = spark.read.parquet(s"$outDir/documents.parquet").count()
-    println(s"[textstress] blowup ready: $srcDir ×$factor → $outDir (n=$n)")
-
-    // ONE band-table build (its internal cut makes it reusable) shared by
-    // both LSH checks — at 10×/25× the shingle→minhash job is the
-    // dominant cost and paying it twice doubled the harness runtime
-    val bands = Some(graft.text.TextOps.bandTable(spark, outDir))
-    val (f1, m1) = lshRecallCheck(spark, outDir, factor, bands = bands)
-    println(s"[textstress] $m1")
-    val (f2, m2) = lshVolumeCheck(spark, outDir, factor, bands)
-    println(s"[textstress] $m2")
-    val (f3, m3) = ngramTopCheck(spark, outDir, factor)
-    println(s"[textstress] $m3")
-    val failures = f1 ++ f2 ++ f3
-    spark.stop()
+    val (n, failures) =
+      try Blowup.inDir(args.lift(2), "graft_text_stress") { outDir =>
+        Blowup.corpus(spark, srcDir, factor, outDir)
+        val n = spark.read.parquet(s"$outDir/documents.parquet").count()
+        println(s"[textstress] blowup ready: $srcDir ×$factor → $outDir " +
+          s"(n=$n)")
+        // ONE band-table build (its internal cut makes it reusable) shared
+        // by both LSH checks — the shingle→minhash job dominates the cost
+        val bands = Some(graft.text.TextOps.bandTable(spark, outDir))
+        val (f1, m1) = lshRecallCheck(spark, outDir, factor, bands = bands)
+        println(s"[textstress] $m1")
+        val (f2, m2) = lshVolumeCheck(spark, outDir, factor, bands)
+        println(s"[textstress] $m2")
+        val (f3, m3) = ngramTopCheck(spark, outDir, factor)
+        println(s"[textstress] $m3")
+        (n, f1 ++ f2 ++ f3)
+      } finally spark.stop()
     if (failures.nonEmpty) {
       failures.foreach(f => System.err.println(s"[textstress] FAIL $f"))
       sys.exit(1)

@@ -9,9 +9,9 @@ import graft.sim.SimilarityOps
   * results under `local` (executor-local checkpoint blocks), `reliable`
   * (cluster-durable checkpoint dir; survives executor loss), and `disk`
   * (DISK_ONLY persist; lineage preserved, lost partitions recompute). The
-  * full 8-table OR-amplified pair sweep is the heaviest cut consumer (13
-  * cuts per run: vectors + 3 per table via concurrent builders), so it is
-  * the equality vehicle. */
+  * full 8-table OR-amplified pair sweep is the heaviest cut consumer (25
+  * cuts per run: vectors + 3 per table × 8 tables, via concurrent
+  * builders), so it is the equality vehicle. */
 class CutPolicySpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"

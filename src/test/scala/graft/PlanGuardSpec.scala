@@ -233,19 +233,33 @@ class PlanGuardSpec extends AnyFunSuite with SparkSuite {
   test("IVF fine assignment joins super-cells — no broadcast side ∝ n") {
     // the hierarchical two-level assignment must reach fine centroids
     // through the s_id equi-join (vec_cell ⋈ cent_cell) and re-join
-    // centroid vectors by c_id — the round-7 regression shape (all k ≈ n/16
-    // centroids riding one broadcast nested-loop argmax) would leave no
-    // s_id join key in the plan. Size-boundedness of what IS broadcast
-    // (the O(√n) super set) is InvariantCheck's ivf_supers bound; this
-    // pins the structure.
+    // centroid vectors by c_id. The regression shape — all k ≈ n/16
+    // centroids riding one broadcast nested-loop argmax — puts the
+    // centroid vector column `cv` on a nested-loop join's broadcast side.
+    // The super-cell lookups broadcast only the O(√n) super vectors `suv`
+    // (their size bound is InvariantCheck's ivf_supers) and stay allowed.
+    // A logical plan prints these joins as `Join Cross`, never as
+    // CartesianProduct, so the check reads the physical plan.
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      CartesianProductExec}
     val plan = probe(graft.sim.SimilarityOps
-      .ivfAssignments(spark, dir).queryExecution.optimizedPlan.toString)
-    assert(plan.contains("s_id"),
+      .ivfAssignments(spark, dir).queryExecution.sparkPlan)
+    assert(plan.toString.contains("s_id"),
       "expected the super-cell (s_id) equi-join in the IVF assignment plan")
-    // the fine candidate join keys must appear as join conditions, not
-    // inside a nested-loop filter over a full centroid broadcast
-    assert(!plan.contains("CartesianProduct"),
-      "IVF assignment contains an unhinted cartesian product")
+    assert(plan.collect { case c: CartesianProductExec => c }.isEmpty,
+      "IVF assignment contains a cartesian product")
+    val broadcastSides = plan.collect { case j: BroadcastNestedLoopJoinExec =>
+      (j.buildSide match {
+        case BuildLeft => j.left
+        case BuildRight => j.right
+      }).output.map(_.name)
+    }
+    assert(broadcastSides.exists(_.contains("suv")),
+      "expected the super-cell lookups as broadcast nested-loop joins")
+    val offending = broadcastSides.filter(_.contains("cv"))
+    assert(offending.isEmpty,
+      s"a nested-loop join broadcasts centroid vectors: $offending")
   }
 
   test("executed-mode spot check: q_dup_clusters' CC joins past real checkpoints") {

@@ -85,7 +85,8 @@ class TableContractSpec extends AnyFunSuite with SparkSuite {
   // sentenceTopicRows encodes a join elimination (drop lineitem⋈orders for
   // header-free consumers) whose correctness rests on referential integrity
   // of the generated corpus: every lineitem row must have a matching order
-  // header. The election gate pins it transitively (one-scan ≡ two-pass);
+  // header. The election gate pins it transitively (its DuckDB oracle reads
+  // the joined relation);
   // this pins the projection identity DIRECTLY, so an RI break in a future
   // testdata vintage (orphan lineitems) names its root cause in-suite.
   for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
