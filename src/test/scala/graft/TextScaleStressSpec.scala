@@ -18,6 +18,11 @@ class TextScaleStressSpec extends AnyFunSuite with SparkSuite {
     o
   }
 
+  test("schema matches the source table exactly") {
+    assert(spark.read.parquet(s"$out/documents.parquet").schema
+      == spark.read.parquet(s"$dir/documents.parquet").schema)
+  }
+
   test("the three near-dup pins hold at a small factor") {
     val (f1, m1) = TextScaleStress.lshRecallCheck(spark, out, 3)
     val (f2, m2) = TextScaleStress.lshVolumeCheck(spark, out, 3)
