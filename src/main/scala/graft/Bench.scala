@@ -1,26 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line.
+  * prints its JSON record.
   *
   * Noise protocol: the host VM shows extreme run-to-run noise (the same query
-  * has measured 5 s and 165 s — multi-minute I/O + CPU-steal windows). Two
-  * mitigations, both aimed at that failure mode rather than ordinary jitter:
+  * has measured 5 s and 165 s — multi-minute I/O + CPU-steal windows). Each
+  * set runs THREE full INTERLEAVED passes (all queries pass 1, then all
+  * pass 2, then all pass 3) and reports the per-query MINIMUM. Interleaving
+  * matters: back-to-back reps of one query both land inside a contention
+  * window and best-of-N learns nothing; spacing the reps a full pass apart
+  * means a window must persist across the whole run to poison a query's
+  * every rep. Pass 1 doubles as JIT/codegen warm-up.
   *
-  *  - THREE full INTERLEAVED passes (all queries pass 1, then all pass 2,
-  *    then all pass 3) with the per-query MINIMUM reported. Interleaving
-  *    matters: back-to-back reps of one query both land inside a contention
-  *    window and best-of-N learns nothing; spacing the reps a full pass apart
-  *    means a window must persist across the whole run to poison a query's
-  *    every rep. Pass 1 doubles as JIT/codegen warm-up.
-  *  - A constant-work CALIBRATION query (a fixed in-memory aggregate that
-  *    never touches disk) timed once per pass and reported per-pass as
-  *    `calibration`. Its cost is invariant by construction, so any blow-up
-  *    between passes timestamps a contended window and tells a reader which
-  *    pass (and how badly) was poisoned — turning "the number looks slow"
-  *    into an auditable measurement.
+  * Wall time says how long; it cannot say whether a plan changed. The full
+  * record carries each query's [[Work]] from its last pass (jobs, stages,
+  * tasks, bytes, CPU and AQE-final plan counts), and BenchProfileSpec gates
+  * the deterministic counts against the checked-in `bench_profile.json`.
   */
 object Bench {
 
@@ -28,10 +25,10 @@ object Bench {
     * the headline: one representative per operator family (full coverage is
     * Verify's job; benching all ~60 registered queries would measure harness
     * overhead, not the engine), and the only set summed into `total`. Every
-    * later set is a showcase block timed with the same interleaved protocol
-    * and its own calibration samples, run after the sets before it so their
-    * numbers stay round-over-round comparable; the `_rNN` suffix is the
-    * round a set's operators were first benched (BASELINE.md). */
+    * later set is a showcase block timed with the same interleaved protocol,
+    * run after the sets before it so their numbers stay round-over-round
+    * comparable; the `_rNN` suffix is the round a set's operators were first
+    * benched (BASELINE.md). */
   val sets: Seq[(String, Seq[String])] = Seq(
     "queries" -> Seq(
       "q1_agg",                  // grouped aggregate on the raw fact table
@@ -73,36 +70,30 @@ object Bench {
       "q_board_pipeline",     // search modes→first-wins dedup→quarterly chain
       "q_network_pipeline"))  // §3.1 graph arm: roles→co-mention→layout chain
 
-  /** A set's calibration key in the full record. */
-  private def calibrationKey(set: String): String =
-    if (set == "queries") "calibration" else s"calibration_$set"
+  /** One timed `count()` of a query on `sfDir` and the work it did. The
+    * clock stops before [[WorkCount]]'s flush. */
+  private[graft] def once(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Work) =
+    WorkCount.during(spark) {
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).count()
+      finally PlanProbe.releaseCuts() // no-op unless cutPolicy=disk
+      (System.nanoTime() - t0) / 1e9
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session(overrides = Session.registryConf)
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case t: Throwable =>
-          // A failed query must NOT silently shrink the total (which would
-          // read as a speedup): log it and surface it in the JSON line.
-          System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
-          return -1.0
-      } finally PlanProbe.releaseCuts() // no-op unless cutPolicy=disk
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Constant-work calibration: ~32M-row in-memory range aggregate, no I/O.
-    // Materialized via head(), NOT count(): count() re-aggregates to
-    // count(1) and column pruning deletes the sum arithmetic entirely,
-    // leaving an empty-body range loop that measures nothing.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 32L * 1000 * 1000, 1, 32)
-        .selectExpr("sum(id * 3 % 7) as s").head()
-      (System.nanoTime() - t0) / 1e9
-    }
     val qs0 = SparkEntry.queries
+    // None when the query failed. A failed query must NOT silently shrink
+    // the total (which would read as a speedup): it is logged and surfaced
+    // in the JSON line.
+    def attempt(name: String): Option[(Double, Work)] =
+      try Some(once(spark, sfDir, qs0(name)))
+      catch { case t: Throwable =>
+        System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
+        None
+      }
     // a registry-subset run filters each set down to its registered queries
     val present: Seq[(String, Seq[String])] =
       sets.map { case (k, names) => k -> names.filter(qs0.contains) }
@@ -110,23 +101,16 @@ object Bench {
     // times(name) accumulates one entry per pass; -1 marks a failed rep
     val times = scala.collection.mutable.Map(
       present.flatMap(_._2).map(_ -> List.empty[Double]): _*)
+    val profile = scala.collection.mutable.Map.empty[String, Work]
     // headline passes run FIRST and alone — extras must not perturb the
     // page-cache/GC conditions of headline reps 2-3, or `total` stops being
     // comparable to rounds benched before extras existed; each later set
-    // repeats the same interleaved protocol (with its own calibration
-    // samples) after the previous set completes. An EMPTY set skips its
-    // calibration samples: probes guarding zero queries are pure overhead,
-    // and the JSON gets an empty calibration list.
-    def runBlock(names: Seq[String]): Seq[Double] =
-      if (names.isEmpty) Seq.empty
-      else (1 to passes).map { _ =>
-        val c = calibrate()
-        names.foreach { name => times(name) :+= once(name, qs0(name)) }
-        c
+    // repeats the same interleaved protocol after the previous set completes
+    for ((_, names) <- present; _ <- 1 to passes; name <- names)
+      attempt(name) match {
+        case Some((t, w)) => times(name) :+= t; profile(name) = w
+        case None => times(name) :+= -1.0
       }
-    // (set key, its queries, its calibration samples), in run order
-    val blocks: Seq[(String, Seq[String], Seq[Double])] =
-      present.map { case (k, names) => (k, names, runBlock(names)) }
     def minOf(name: String): Double = {
       val ok = times(name).filter(_ >= 0)
       if (ok.isEmpty) -1.0 else ok.min
@@ -136,7 +120,7 @@ object Bench {
     // comma decimals (broken JSON) on comma-decimal default locales
     def fmt3(x: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-    val setsJson = blocks.map { case (k, names, _) =>
+    val setsJson = present.map { case (k, names) =>
       kv(k, names.map(n => kv(n, minOf(n).toString)).mkString("{", ",", "}"))
     }.mkString(",")
     // every set participates in failure gating exactly like the headline —
@@ -148,111 +132,31 @@ object Bench {
     val failed = sets.flatMap(_._2).filterNot(qs0.contains) ++
       present.flatMap(_._2).filter(n => times(n).exists(_ < 0))
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calibJson = blocks.map { case (k, _, cs) =>
-      kv(calibrationKey(k), cs.map(fmt3).mkString("[", ",", "]"))
-    }.mkString(",")
-    val total = blocks.head._2.map(minOf).filter(_ >= 0).sum
+    val profileJson = present.flatMap(_._2).flatMap(n => profile.get(n)
+      .map(w => kv(n, w.json()))).mkString("{", ",", "}")
+    val total = present.head._2.map(minOf).filter(_ >= 0).sum
 
-    // ---- machine-readable drift verdicts --------------------------------
-    // Automates the adjudication BASELINE.md prescribes in prose: compare
-    // each query to the checked-in steady-state table
-    // (bench_steady_state.json), gate comparability on that pass's
-    // calibration sample, and flag ONLY structural violations (≥2× steady
-    // on ≥2 calibration-clean passes) — single-sample excursions are the
-    // documented VM noise and report as "noise", not regressions.
-    def resolveRepoFile(name: String): String =
-      if (java.nio.file.Files.isReadable(java.nio.file.Paths.get(name))) name
-      else try {
-        // fall back to the repo root relative to the packaged jar
-        // (target/scala-2.13/<jar> → ../../../<name>)
-        java.nio.file.Paths.get(getClass.getProtectionDomain.getCodeSource
-            .getLocation.toURI)
-          .getParent.getParent.getParent.resolve(name).toString
-      } catch { case _: Throwable => name }
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
-      resolveRepoFile("bench_steady_state.json"))
-    val steady: Map[String, Double] = try {
-      BenchDrift.parseSteady(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(baselinePath)), "UTF-8"))
-    } catch { case _: Throwable => Map.empty[String, Double] }
-    // Run-level contention factor: median clean-best/steady ratio across
-    // every baselined query in the run. The structural bound scales by it,
-    // so an IO-contended window that slows EVERY query uniformly (while
-    // the small CPU-bound calibration probe stays clean) can't mass-flag
-    // false regressions — a real regression is localized and stands out
-    // against the median. Computed before adjudication; emitted as
-    // "run_ratio" so readers see the contention the verdicts discounted.
-    // COMPOSITION NOTE: when a round ADDS a block here (r15 added
-    // extras_r14/extras_r15), the first run after the change computes
-    // run_ratio over a different query population than the persisted
-    // record it is compared against — environmentVerdict's one boundary
-    // run is a comparability blip, not environment drift (recorded in
-    // BASELINE.md round 16; the two-consecutive-runs rule absorbs it).
-    val runRatio = BenchDrift.runRatio(blocks.flatMap { case (_, names, cs) =>
-      names.flatMap(n => BenchDrift.cleanBestRatio(steady.get(n), times(n), cs))
-    })
-    // Adjudication rules live in BenchDrift (unit-tested by
-    // BenchDriftSpec); status + JSON computed ONCE per query so
-    // drift_structural can never disagree with the per-query rows.
-    def driftOf(name: String, cs: Seq[Double]): (String, String) = {
-      val ts = times(name)
-      val status = BenchDrift.status(steady.get(name), ts, cs, runRatio)
-      (status, kv(name, "{" + kv("steady", fmt3(steady.getOrElse(name, -1.0))) +
-        "," + kv("best", fmt3(minOf(name))) +
-        "," + kv("samples", ts.map(fmt3).mkString("[", ",", "]")) +
-        ",\"status\":\"" + status + "\"}"))
-    }
-    val drift: Seq[(String, (String, String))] = blocks.flatMap {
-      case (_, names, cs) => names.map(n => n -> driftOf(n, cs))
-    }
-    val driftJson = drift.map(_._2._2).mkString("{", ",", "}")
-    val structural = drift.collect { case (n, ("structural", _)) => n }
-    val structuralJson = structural.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val baselineTag = if (steady.isEmpty) "missing" else baselinePath
-    val runRatioStr = fmt3(runRatio)
-
-    // Persistent-contention escalation: the record file carries the LAST
-    // run's run_ratio, so two consecutive contended runs (>1.5) become an
-    // explicit "degraded" verdict — runRatio's documented uniform-slowdown
-    // blind spot is machine-adjudicated instead of shrugged off twice.
-    // The record is accepted as prior evidence only when its boot_id
-    // matches this boot (parseRunRatio): a record that rode in with a git
-    // checkout carries another machine/time's weather and must read as
-    // first-strike, not strike two.
-    val recordPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD",
-      resolveRepoFile("bench_last_run.json"))
-    val bootId = BenchDrift.bootId
-    val prevRatio = try {
-      BenchDrift.parseRunRatio(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(recordPath)), "UTF-8"), bootId)
-    } catch { case _: Throwable => None }
-    val envVerdict = BenchDrift.environmentVerdict(prevRatio, runRatio)
-
-    val record = s"""{"metric":"total","value":$total,"unit":"sec",$setsJson,"failures":$failedJson,"passes":$passes,$calibJson,"drift":$driftJson,"drift_structural":$structuralJson,"run_ratio":$runRatioStr,"environment":"$envVerdict","boot_id":"$bootId","drift_baseline":"$baselineTag","sf":"$sfDir"}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec",$setsJson,"failures":$failedJson,"passes":$passes,"profile":$profileJson,"sf":"$sfDir"}"""
     // Persist the full record: the driver's tail capture keeps only the
-    // compact trailing line, so per-query history would otherwise live
-    // only in prose. A write failure (read-only checkout, container FS)
-    // must not fail the bench — the record is a convenience copy of the
+    // compact trailing line. A write failure (read-only checkout, container
+    // FS) must not fail the bench — the record is a convenience copy of the
     // stdout line, not the measurement.
+    val recordPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD",
+      graft.sources.SourceOps.repoFile("bench_last_run.json"))
     try java.nio.file.Files.write(java.nio.file.Paths.get(recordPath),
       (record + "\n").getBytes("UTF-8"))
     catch { case t: Throwable =>
       System.err.println(s"[bench] record write failed ($recordPath): $t") }
     println(record)
     // The harness that records this run keeps only the LAST ~2000 chars of
-    // stdout; the full record above can exceed that (the r11 drift payload
-    // did, leaving the round's total unrecoverable from the capture). A
-    // compact trailing summary guarantees any tail capture ends with a
-    // parseable record carrying the headline total.
-    // The compact line also carries every timed query's best-of-3 (all
-    // sets, 3 decimals), so the tail capture alone satisfies the stdout
+    // stdout, which the full record exceeds. A compact trailing line with
+    // every timed query's best-of-3 (all sets, 3 decimals) guarantees any
+    // tail capture ends with a parseable record satisfying the stdout
     // contract {"metric","value","unit","queries","sf"}; `value` stays the
-    // headline-set total for round-over-round comparability. (~1.4 kB,
-    // still inside a 2000-char tail as the final line.)
-    val totalCompact = fmt3(total)
+    // headline-set total for round-over-round comparability.
     val allQsJson = present.flatMap(_._2).map(n => kv(n, fmt3(minOf(n))))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total_compact","value":$totalCompact,"unit":"sec","queries":$allQsJson,"failures":$failedJson,"drift_structural":$structuralJson,"run_ratio":$runRatioStr,"environment":"$envVerdict","sf":"$sfDir"}""")
+    println(s"""{"metric":"total_compact","value":${fmt3(total)},"unit":"sec","queries":$allQsJson,"failures":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

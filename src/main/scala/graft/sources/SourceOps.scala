@@ -36,6 +36,25 @@ object SourceOps {
     } catch { case _: java.io.IOException => Vector.empty }
   }
 
+  /** `name`, a path relative to the repo root, as an absolute path: under
+    * the working directory when it exists there (sbt and spark-submit run
+    * from the repo root), else under `root` when it exists there, else under
+    * the working directory. `root` defaults to the repo root found from the
+    * code source, three levels above the jar or classes dir
+    * (`target/scala-2.13/…`). */
+  private[graft] def repoFile(name: String,
+      cwd: java.nio.file.Path = java.nio.file.Paths.get(""),
+      root: => Option[java.nio.file.Path] = codeRoot): String = {
+    val here = cwd.toAbsolutePath.resolve(name)
+    (Iterator(here) ++ root.iterator.map(_.resolve(name)))
+      .find(java.nio.file.Files.exists(_)).getOrElse(here).toString
+  }
+
+  private def codeRoot: Option[java.nio.file.Path] =
+    try Option(java.nio.file.Paths.get(getClass.getProtectionDomain
+      .getCodeSource.getLocation.toURI).getParent.getParent.getParent)
+    catch { case _: Exception => None }
+
   /** Inferred schemas keyed on (path, the session's `spark.sql.*`
     * settings), each held with the listing it was inferred from. Settings
     * such as partition-type inference and `nanosAsLong` change what a

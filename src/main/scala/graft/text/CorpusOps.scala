@@ -177,9 +177,7 @@ object CorpusOps {
     var labels = current
     var converged = false
     var rounds = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && rounds < maxRounds) {
-      val tRound = System.nanoTime()
       // convergence = exact count of changed labels (NOT a label-sum probe,
       // which can silently overflow Long on large id domains), OBSERVED on
       // the checkpoint's own materialization job via CollectMetrics instead
@@ -199,9 +197,6 @@ object CorpusOps {
       labels = next.select(col("doc_id"), col("label"))
       converged = nChanged == 0L
       rounds += 1
-      if (debug) System.err.println(
-        f"[cc] round $rounds: changed=$nChanged%d " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     if (!converged)
       // loud, not silent: unconverged labels are WRONG cluster ids
@@ -806,13 +801,13 @@ object CorpusOps {
     * `graft.tools.MakeFixtures`, committed with the repo): a handful of
     * eval documents whose text overlaps the sf0.01 corpus, so contamination
     * exists to find. Resolution order: GRAFT_FIXTURES_DIR override, then
-    * `fixtures/` under the working directory (sbt and the spark-submit
-    * mains all run from the repo root — no machine-specific absolute path
-    * baked in). The DuckDB oracle embeds the SAME resolved path
-    * (single-quote-escaped), so both engines always read one fixture. */
+    * `fixtures/` under the working directory, then under the repo root
+    * ([[graft.sources.SourceOps.repoFile]]), so a run from any directory
+    * finds the committed fixture. The DuckDB oracle embeds the SAME resolved
+    * path (single-quote-escaped), so both engines always read one fixture. */
   private[graft] val EvalSetPath: String =
     sys.env.get("GRAFT_FIXTURES_DIR")
-      .getOrElse(new java.io.File("fixtures").getAbsolutePath) +
+      .getOrElse(graft.sources.SourceOps.repoFile("fixtures")) +
       "/evalset.parquet"
 
   /** [[EvalSetPath]] as a safe SQL string literal body. */

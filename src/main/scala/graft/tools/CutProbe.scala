@@ -65,7 +65,7 @@ object CutProbe {
       def fmt(ts: Seq[(Double, Array[Row])]) =
         s"[${ts.map(t => f"${t._1}%.3f").mkString(",")}] " +
           f"best=${ts.map(_._1).min}%.3f"
-      println(f"[cutprobe] $name%-26s ×$factor%-3d values_equal=$eq " +
+      println(f"[cutprobe] $name%-26s x$factor%-3d values_equal=$eq " +
         s"cut=false:${fmt(off)} cut=true:${fmt(on)}")
       eq
     }.forall(identity)
@@ -75,7 +75,7 @@ object CutProbe {
         if (factor <= 1) probe(srcDir)
         else Blowup.inDir(None, "graft_cut_probe") { out =>
           Blowup.corpus(spark, srcDir, factor, out)
-          println(s"[cutprobe] blowup ready: $srcDir ×$factor → $out")
+          println(s"[cutprobe] blowup ready: $srcDir x$factor -> $out")
           probe(out)
         }
       } finally spark.stop()

@@ -31,7 +31,7 @@ object InvariantCheck {
     ("q_mask_multi", "n_mismatch", v => v == 0L,
       "multi-span mask UDF == column-expression twin on every row"),
     ("q_mask_roundtrip", "n_mismatch", v => v == 0L,
-      "mask→unmask round-trip == direct splice on every row"),
+      "mask->unmask round-trip == direct splice on every row"),
     ("q_label_batched", "n_mismatch", v => v == 0L,
       "batched-prompt labels == codegen stub labels on every row"),
     ("q_media_features", "n_mismatch", v => v == 0L,
@@ -82,7 +82,7 @@ object InvariantCheck {
     // entities can never exceed kept documents in any (mode, quarter) cell
     ("q_board_pipeline", "min(cast(n_docs >= n_entities as int))",
       v => v == 1,
-      "board dedup keeps ≤ one entity per document per quarter cell"),
+      "board dedup keeps <= one entity per document per quarter cell"),
     // network: the layout's rescale invariants hold on the composed chain
     ("q_network_pipeline", "min(cast(in_range and axis_max_ok as int))",
       v => v == 1,
@@ -130,7 +130,7 @@ object InvariantCheck {
           s"$diameter (bound $bound)")
         None
       } else Some(s"q_cc_chain: $rounds rounds VIOLATES the O(log d) bound " +
-        s"$bound for diameter $diameter — pointer jumping is not engaging")
+        s"$bound for diameter $diameter - pointer jumping is not engaging")
     } catch {
       case e: Throwable => Some(s"q_cc_chain: failed to run: ${e.getMessage}")
     } finally graft.PlanProbe.releaseCuts()
@@ -152,7 +152,7 @@ object InvariantCheck {
         None
       } else Some(s"q_pack_manifest: manifests carry ${manifest.getLong(0)} " +
         s"docs/${manifest.getLong(1)} toks but corpus has " +
-        s"${corpus.getLong(0)}/${corpus.getLong(1)} — packing lost or " +
+        s"${corpus.getLong(0)}/${corpus.getLong(1)} - packing lost or " +
         "duplicated documents")
     } catch {
       case e: Throwable => Some(s"q_pack_manifest: failed to run: ${e.getMessage}")
@@ -181,7 +181,7 @@ object InvariantCheck {
         None
       } else Some(s"q_seq_pack_ffd: docs ${tot.getLong(0)}/" +
         s"${corpus.getLong(0)} toks ${tot.getLong(1)}/${corpus.getLong(1)} " +
-        s"overfull_multidoc=$overfull — FFD lost/duplicated docs or " +
+        s"overfull_multidoc=$overfull - FFD lost/duplicated docs or " +
         "overpacked a bin")
     } catch {
       case e: Throwable => Some(s"q_seq_pack_ffd: failed to run: ${e.getMessage}")
@@ -261,16 +261,16 @@ object InvariantCheck {
         filesPerBucket.values.forall(_ == 1)
       if (copyOk && replayOk && compactOk && layoutOk) {
         println(s"[invariant] OK ivf_lifecycle: built $built, appended " +
-          s"$nCopies copies ×2 (replay), compacted back to " +
-          s"${built + nCopies}; copies searchable at cos≈1, ranked results " +
+          s"$nCopies copies x2 (replay), compacted back to " +
+          s"${built + nCopies}; copies searchable at cos~1, ranked results " +
           "bit-identical across replay and compaction, 1 file/bucket")
         None
       } else Some(s"ivf_lifecycle: copy_seen=$copiesSeen/$nCopies " +
         s"replay(count=$afterReplay vs ${built + 2 * nCopies}, " +
         s"identical=${twice == once}) compact(count=$compacted vs " +
         s"${built + nCopies}, identical=${post == once}) " +
-        s"files/bucket=${filesPerBucket.values.toSeq.distinct.sorted} — " +
-        "the build→append→compact→search cycle broke on real data")
+        s"files/bucket=${filesPerBucket.values.toSeq.distinct.sorted} - " +
+        "the build->append->compact->search cycle broke on real data")
       } finally {
         // gate hygiene: don't leave a full sf-scale index zone in /tmp on
         // every release run
@@ -348,7 +348,7 @@ object InvariantCheck {
         "companies, leaf and parent rollups both sum to the composite")
       None
     } else Some(s"q_screener_pipeline: n=${rows.length} " +
-      s"bad_accounting=$bad dup_companies=$dup — the tree→matrix " +
+      s"bad_accounting=$bad dup_companies=$dup - the tree->matrix " +
       "composition broke at scale")
   }
 
@@ -375,12 +375,12 @@ object InvariantCheck {
     val nullResp = rows.count(r => r.isNullAt(r.fieldIndex("response")))
     if (rows.nonEmpty && badMean == 0 && badBand == 0 && nullResp == 0) {
       println(s"$tag OK q_report_pipeline: ${rows.length} rows, " +
-        "per-theme attention means ≈ 1, magnitude bands consistent, " +
+        "per-theme attention means ~ 1, magnitude bands consistent, " +
         "responses total")
       None
     } else Some(s"q_report_pipeline: n=${rows.length} " +
       s"themes_off_mean=$badMean bad_magnitude=$badBand " +
-      s"null_responses=$nullResp — the report composition broke at scale")
+      s"null_responses=$nullResp - the report composition broke at scale")
   }
 
   /** The §3.1 panel's dense-scaffold + reconciliation identities, asserted
@@ -418,14 +418,14 @@ object InvariantCheck {
           rs.head.getAs[Long]("basket_total") }
     if (rows.nonEmpty && rows.length == weeks.length * comps.length &&
         comps.length <= 6 && mondaysOk && netOk && unreconciled == 0) {
-      println(s"$tag OK q_market_pipeline: dense ${weeks.length}×" +
+      println(s"$tag OK q_market_pipeline: dense ${weeks.length}x" +
         s"${comps.length} W-MON panel, weekly counts reconcile to the " +
         "basket totals")
       None
     } else Some(s"q_market_pipeline: rows=${rows.length} " +
       s"weeks=${weeks.length} companies=${comps.length} " +
       s"mondays_ok=$mondaysOk net_ok=$netOk unreconciled=$unreconciled " +
-      "— the basket→panel composition broke at scale")
+      "- the basket->panel composition broke at scale")
   }
 
   // ---- IVF scale pins, shared with graft.tools.ScaleStress (which runs
@@ -466,8 +466,8 @@ object InvariantCheck {
       None
     } else Some(s"ivf_quantizer: n=$n tables=$nt worst k=$k " +
       s"max_bucket=$mx sum_sq=$ss VIOLATES scale shape (need all " +
-      s"${graft.sim.SimilarityOps.IvfTables} tables, k ≥ n/${4L * tb}, " +
-      s"max ≤ ${8L * tb}, Σb² ≤ 8·n·$tb per table) — a quantizer table " +
+      s"${graft.sim.SimilarityOps.IvfTables} tables, k >= n/${4L * tb}, " +
+      s"max <= ${8L * tb}, sum b^2 <= 8*n*$tb per table) - a quantizer table " +
       "stopped scaling with the corpus")
   } catch {
     case e: Throwable => Some(s"ivf_quantizer: failed to run: ${e.getMessage}")
@@ -487,12 +487,12 @@ object InvariantCheck {
     val cap = math.max(8L, 2L * math.ceil(math.sqrt(n.toDouble)).toLong)
     if (counts.forall(c => c >= 1L && c <= cap)) {
       println(s"[invariant] OK ivf_supers: per-table super counts " +
-        s"${counts.mkString("/")} for n=$n (O(√n) cap $cap) — no " +
-        "assignment broadcast side ∝ n")
+        s"${counts.mkString("/")} for n=$n (O(sqrtn) cap $cap) - no " +
+        "assignment broadcast side ~ n")
       None
     } else Some(s"ivf_supers: per-table super counts " +
-      s"${counts.mkString("/")} for n=$n VIOLATE the O(√n) broadcast " +
-      s"bound [1, $cap] — a level-1 quantizer stopped being sublinear")
+      s"${counts.mkString("/")} for n=$n VIOLATE the O(sqrtn) broadcast " +
+      s"bound [1, $cap] - a level-1 quantizer stopped being sublinear")
   } catch {
     case e: Throwable => Some(s"ivf_supers: failed to run: ${e.getMessage}")
   }
@@ -516,7 +516,7 @@ object InvariantCheck {
     val recall = if (nBf == 0) 1.0 else nHit.toDouble / nBf
     if (nBf > 0 && recall >= 0.8) {
       println(f"[invariant] OK ivf_recall[$dir]: $nHit/$nBf pairs = " +
-        f"$recall%.3f ≥ 0.8 floor")
+        f"$recall%.3f >= 0.8 floor")
       None
     } else Some(f"ivf_recall[$dir]: $nHit of $nBf brute-force pairs = " +
       f"$recall%.3f VIOLATES the 0.8 floor (or no ground-truth pairs " +

@@ -216,8 +216,8 @@ object PipelineScaleStress {
       .toSeq.distinct
 
   /** Task-duration listener for the straggler pin: per-stage max/median
-    * over completed tasks. Spark's listener bus is async — callers sleep
-    * briefly after the job before reading (tool-grade flush). */
+    * over completed tasks. Spark's listener bus is async — callers flush it
+    * with a [[graft.WorkCount]] call before reading. */
   private final class TaskStats extends SparkListener {
     private val durs =
       scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
@@ -279,8 +279,8 @@ object PipelineScaleStress {
     Blowup.corpus(spark, srcDir, factor, outDir)
     val n = spark.read.parquet(s"$outDir/lineitem.parquet").count()
     val nBase = spark.read.parquet(s"$srcDir/lineitem.parquet").count()
-    println(s"[pipestress] blowup ready: $srcDir ×$factor → $outDir " +
-      s"(chunks $nBase → $n)")
+    println(s"[pipestress] blowup ready: $srcDir x$factor -> $outDir " +
+      s"(chunks $nBase -> $n)")
 
     val pipelines = selected(Pipelines)
     val qs = graft.SparkEntry.queries
@@ -296,29 +296,29 @@ object PipelineScaleStress {
         offendingSmjKeys(plan, AllowedSmj.getOrElse(name, _ => false))
       val cart = countNode(plan, "CartesianProduct")
       val bound = tBase * factor * 3
-      println(f"[pipestress] $name%-22s base=$tBase%7.2fs ×$factor=" +
+      println(f"[pipestress] $name%-22s base=$tBase%7.2fs x$factor=" +
         f"$tBig%7.2fs (bound ${bound}%.2f) rows=${rows.length} " +
         s"SMJ=$smj (off-key ${badSmj.size}) CART=$cart")
       val invFail = invariantFailures(spark, name, rows, schema,
-        s"at ×$factor")
+        s"at x$factor")
       val planFail =
         if (badSmj.isEmpty && cart == 0) Nil
-        else Seq(s"$name: AQE-final plan at ×$factor has CART=$cart, " +
+        else Seq(s"$name: AQE-final plan at x$factor has CART=$cart, " +
           s"off-fact-key shuffle joins:\n${badSmj.mkString("\n")}\n$plan")
       val timeFail =
-        if (rows.isEmpty) Seq(s"$name: empty result at ×$factor")
+        if (rows.isEmpty) Seq(s"$name: empty result at x$factor")
         else if (tBig <= bound) Nil
-        else Seq(f"$name: $tBig%.2fs at ×$factor exceeds ~linear bound " +
-          f"$bound%.2fs (base $tBase%.2fs) — superlinear blowup")
+        else Seq(f"$name: $tBig%.2fs at x$factor exceeds ~linear bound " +
+          f"$bound%.2fs (base $tBase%.2fs) - superlinear blowup")
       invFail ++ planFail ++ timeFail
     }
 
-    val armFailures = auditSearchArms(spark, outDir, s"×$factor")
+    val armFailures = auditSearchArms(spark, outDir, s"x$factor")
 
     val out = failures ++ armFailures
     if (out.isEmpty)
       println(s"[pipestress] all ${pipelines.size} composed-lifecycle " +
-        s"scale pins hold at ×$factor (n=$n chunks)")
+        s"scale pins hold at x$factor (n=$n chunks)")
     out
   }
 
@@ -347,7 +347,7 @@ object PipelineScaleStress {
       .filter(col("l_orderkey") === Blowup.HotOrder).count()
     val hotEnt = spark.read.parquet(s"$skewDir/lineitem.parquet")
       .filter(col("l_suppkey") === Blowup.HotSupp).count()
-    println(f"[pipestress] skew blowup ready: ×$factor skew=$skewPct%% → " +
+    println(f"[pipestress] skew blowup ready: x$factor skew=$skewPct%% -> " +
       f"$skewDir (n=$n, hot-doc rows=$hot = ${100.0 * hot / n}%.1f%%, " +
       f"hot-entity rows=$hotEnt = ${100.0 * hotEnt / n}%.1f%%)")
 
@@ -358,19 +358,19 @@ object PipelineScaleStress {
     qs(pipelines.head)(spark, srcDir).count() // warm-up
     graft.PlanProbe.releaseCuts()
 
+    // a WorkCount call returns only after every listener event posted
+    // before it has been delivered, TaskStats' included
+    def flush(): Unit = graft.WorkCount.during(spark)(())
     val failures = pipelines.flatMap { name =>
-      def drainReset(): Unit = {
-        Thread.sleep(500) // drain the prior pass's async listener events
-        stats.reset()
-      }
+      def drainReset(): Unit = { flush(); stats.reset() }
       val (tUni, _, _, _) =
         timed(qs(name)(spark, uniDir), beforeLast = drainReset)
-      Thread.sleep(500)
+      flush()
       val (ratioU, stageU, maxMsU) = stats.worstStageRatio()
       val uniSite = stats.stageName(stageU)
       val (tSkew, rows, plan, schema) =
         timed(qs(name)(spark, skewDir), beforeLast = drainReset)
-      Thread.sleep(500) // listener-bus flush (async events)
+      flush()
       val (ratio, stage, maxMs) = stats.worstStageRatio()
       val skewSplit = plan.contains("skew=true")
       val badSmj =
@@ -380,13 +380,13 @@ object PipelineScaleStress {
       val hotShare = maxMs / 1000.0 / tSkew
       println(f"[pipestress] $name%-22s uni=$tUni%7.2fs skew=$tSkew%7.2fs " +
         f"(bound $bound%.2f) rows=${rows.length} skewJoin=$skewSplit " +
-        f"straggler uni=$ratioU%.1f× (max ${maxMsU}ms " +
-        f"'$uniSite') skew=$ratio%.1f× (stage $stage " +
+        f"straggler uni=$ratioU%.1fx (max ${maxMsU}ms " +
+        f"'$uniSite') skew=$ratio%.1fx (stage $stage " +
         f"'${stats.stageName(stage)}', max ${maxMs}ms = " +
         f"${hotShare * 100}%.0f%% of wall) " +
         s"off-key ${badSmj.size} CART=$cart")
       val invFail = invariantFailures(spark, name, rows, schema,
-        s"at ×$factor skew=$skewPct%")
+        s"at x$factor skew=$skewPct%")
       val planFail =
         if (badSmj.isEmpty && cart == 0) Nil
         else Seq(s"$name: skewed AQE-final plan has CART=$cart, " +
@@ -402,25 +402,25 @@ object PipelineScaleStress {
           hotShare < StragglerMaterialShare ||
           maxMs <= 2 * maxMsU) Nil
         else Seq(f"$name: no AQE skew split AND straggler ratio " +
-          f"$ratio%.1f× > $StragglerBound with a MATERIAL hot task " +
+          f"$ratio%.1fx > $StragglerBound with a MATERIAL hot task " +
           f"(${maxMs}ms = ${hotShare * 100}%.0f%% of wall vs uniform max " +
-          f"${maxMsU}ms, stage $stage '${stats.stageName(stage)}') — one " +
+          f"${maxMsU}ms, stage $stage '${stats.stageName(stage)}') - one " +
           "reducer ate the hot key")
       val timeFail =
         if (rows.isEmpty) Seq(s"$name: empty result under skew")
         else if (tSkew <= bound) Nil
         else Seq(f"$name: skew wall $tSkew%.2fs exceeds " +
-          f"$SkewWallFactor× uniform ($tUni%.2fs) at the same n")
+          f"${SkewWallFactor}x uniform ($tUni%.2fs) at the same n")
       invFail ++ planFail ++ mitigationFail ++ timeFail
     }
 
     val armFailures =
-      auditSearchArms(spark, skewDir, s"×$factor skew=$skewPct%")
+      auditSearchArms(spark, skewDir, s"x$factor skew=$skewPct%")
 
     val out = failures ++ armFailures
     if (out.isEmpty)
       println(s"[pipestress] all ${pipelines.size} skew-sensitive " +
-        s"lifecycles hold at ×$factor with $skewPct% hot-key skew " +
+        s"lifecycles hold at x$factor with $skewPct% hot-key skew " +
         s"(n=$n chunks)")
     out
   }

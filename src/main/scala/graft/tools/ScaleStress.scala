@@ -32,7 +32,7 @@ object ScaleStress {
       try Blowup.inDir(args.lift(2), "graft_scale_stress") { outDir =>
         Blowup.corpus(spark, srcDir, factor, outDir)
         val n = spark.read.parquet(s"$outDir/embeddings.parquet").count()
-        println(s"[stress] blowup ready: $srcDir ×$factor → $outDir (n=$n)")
+        println(s"[stress] blowup ready: $srcDir x$factor -> $outDir (n=$n)")
         (n, InvariantCheck.ivfShapeCheck(spark, outDir).toSeq ++
           InvariantCheck.ivfSupersCheck(spark, outDir) ++
           InvariantCheck.ivfRecallCheck(spark, outDir))

@@ -91,7 +91,7 @@ object TextScaleStress {
     val msg = s"lsh_sum_b2=$sumSq n=$n bound=$bound " +
       f"(ratio=${sumSq.toDouble / n}%.1f per doc)"
     (if (sumSq <= bound) Nil
-     else Seq(s"LSH Σb²=$sumSq exceeds $bound — stop-key signature ($msg)"),
+     else Seq(s"LSH sum b^2=$sumSq exceeds $bound - stop-key signature ($msg)"),
       msg)
   }
 
@@ -163,7 +163,7 @@ object TextScaleStress {
       try Blowup.inDir(args.lift(2), "graft_text_stress") { outDir =>
         Blowup.corpus(spark, srcDir, factor, outDir)
         val n = spark.read.parquet(s"$outDir/documents.parquet").count()
-        println(s"[textstress] blowup ready: $srcDir ×$factor → $outDir " +
+        println(s"[textstress] blowup ready: $srcDir x$factor -> $outDir " +
           s"(n=$n)")
         // ONE band-table build (its internal cut makes it reusable) shared
         // by both LSH checks — the shingle→minhash job dominates the cost

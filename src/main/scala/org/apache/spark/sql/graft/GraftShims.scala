@@ -4,13 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Bridge to `private[sql]` classic-engine internals that a custom-plan API
   * necessarily touches (the standard extension-library technique): Column →
   * Expression conversion, analyzed-plan extraction, and `Dataset.ofRows` to
-  * wrap a hand-constructed LogicalPlan back into a DataFrame. Spark 4 split
-  * `org.apache.spark.sql` into an abstract API and the `classic` execution
-  * implementation; these three hooks are the whole surface graft needs. */
+  * wrap a hand-constructed LogicalPlan back into a DataFrame, checkpoint
+  * release, and the executed plan a SQL-execution end event carries (for
+  * [[graft.WorkCount]]). Spark 4 split `org.apache.spark.sql` into an
+  * abstract API and the `classic` execution implementation. */
 object GraftShims {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -20,6 +23,11 @@ object GraftShims {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
+
+  /** The executed (for AQE, final) plan of a finished SQL execution, when
+    * the end event carries its query execution. */
+  def executedPlan(e: SparkListenerSQLExecutionEnd): Option[SparkPlan] =
+    Option(e.qe).map(_.executedPlan)
 
   /** Free the block-store storage behind a `localCheckpoint()`'d frame.
     *

@@ -15,13 +15,7 @@ class BlowupSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val factor = 3
-  private val tmp = java.nio.file.Files.createTempDirectory("blowup_spec")
-
-  override def afterAll(): Unit =
-    try super.afterAll()
-    finally org.apache.hadoop.fs.FileSystem
-      .getLocal(new org.apache.hadoop.conf.Configuration())
-      .delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
+  private val tmp = tempDir("blowup_spec")
 
   private def blowup(name: String, f: Int, skewPct: Int = 0): String = {
     val out = tmp.resolve(name).toString

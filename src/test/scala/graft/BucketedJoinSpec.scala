@@ -14,7 +14,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val warehouse =
-    java.nio.file.Files.createTempDirectory("graft_wh").toString
+    tempDir("graft_wh").toString
   override protected def sparkOverrides = Map(
     "spark.sql.warehouse.dir" -> warehouse,
     // force the sort-merge path so the assertion is about exchanges, not a

@@ -17,7 +17,7 @@ class ClusteredLayoutSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def parquetFiles(root: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))

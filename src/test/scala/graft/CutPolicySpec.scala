@@ -47,7 +47,7 @@ class CutPolicySpec extends AnyFunSuite with SparkSuite {
     val base = sweep() // default = local
     assert(base.nonEmpty, "sf0.001 must yield near-dup pairs")
 
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val ckDir = tempDir("graft_ck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     val reliable = withPolicy("reliable")(sweep())
     assert(reliable == base, "reliable-checkpoint cuts changed the result")
@@ -80,7 +80,7 @@ class CutPolicySpec extends AnyFunSuite with SparkSuite {
     assert(base == Seq(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
     // fresh checkpoint dir so file-retirement is observable in isolation
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_cc_ck")
+    val ckDir = tempDir("graft_cc_ck")
     spark.sparkContext.setCheckpointDir(ckDir.toString)
     val reliable = withPolicy("reliable")(labels())
     assert(reliable == base, "reliable per-round cuts changed the labels")
@@ -103,7 +103,7 @@ class CutPolicySpec extends AnyFunSuite with SparkSuite {
     def run(): Seq[String] =
       Registry.all.find(_.name == "q_market_pipeline").get
         .run(spark, dir).collect().map(_.toString).toSeq
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_mkt_ck")
+    val ckDir = tempDir("graft_mkt_ck")
     try {
       val base = run()
       assert(base.nonEmpty)
@@ -133,7 +133,7 @@ class CutPolicySpec extends AnyFunSuite with SparkSuite {
     def run(): Seq[String] =
       Registry.all.find(_.name == "q_network_pipeline").get
         .run(spark, dir).collect().map(_.toString).toSeq
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_net_ck")
+    val ckDir = tempDir("graft_net_ck")
     try {
       val base = run()
       assert(base.nonEmpty)
@@ -155,7 +155,7 @@ class CutPolicySpec extends AnyFunSuite with SparkSuite {
   test("a sweep through the persisted assignment index is bit-identical " +
       "to the computed path") {
     val base = sweep()
-    val ix = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
+    val ix = tempDir("graft_ndidx").toString
     SimilarityOps.buildNearDupIndex(spark, dir, ix)
     assert(sweep(Some(ix)) == base,
       "persisted-assignment sweep diverged from the computed quantizers")

@@ -25,7 +25,7 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cache-aside labeling hits the classifier only for novel pairs") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("labelcache")
+    val cacheDir = tempDir("labelcache")
       .resolve("labels").toString
     // classifier instances are serialized into tasks — a plain counter would
     // increment a deserialized copy; an accumulator survives the round trip
@@ -55,7 +55,7 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("duplicate cache rows (concurrent appends) cannot fan out the output") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("labelcache2")
+    val cacheDir = tempDir("labelcache2")
       .resolve("labels").toString
     val chunk = Tables.chunkRows(spark, dir)
     val nIn = chunk.count()
@@ -74,7 +74,7 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
   test("cache rows are valid only for the classifier that wrote them") {
     // a cache path reused across classifier versions must RE-LABEL, not
     // silently serve the previous version's labels
-    val cacheDir = java.nio.file.Files.createTempDirectory("labelcache3")
+    val cacheDir = tempDir("labelcache3")
       .resolve("labels").toString
     val chunk = Tables.chunkRows(spark, dir)
     Labeler.labelWithCache(chunk, Labeler.StubClassifier, cacheDir)
@@ -95,14 +95,14 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a legacy cache without classifier identity is distrusted") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("labelcache4")
+    val cacheDir = tempDir("labelcache4")
       .resolve("labels").toString
     val chunk = Tables.chunkRows(spark, dir)
     Labeler.labelWithCache(chunk, Labeler.StubClassifier, cacheDir)
     // rewrite the cache in the pre-identity 4-column layout
     val legacy = spark.read.parquet(cacheDir)
       .select("entity_id", "text", "label", "motivation")
-    val tmp = java.nio.file.Files.createTempDirectory("legacy")
+    val tmp = tempDir("legacy")
       .resolve("data").toString
     legacy.write.parquet(tmp)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

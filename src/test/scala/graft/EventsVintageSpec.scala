@@ -25,7 +25,7 @@ class EventsVintageSpec extends AnyFunSuite with SparkSuite {
   /** Write a single-row events.parquet whose `ts` physical type is chosen by
     * `tsExpr`, then load it back through the production loader. */
   private def roundTrip(vintage: String, tsExpr: org.apache.spark.sql.Column): Long = {
-    val dir = java.nio.file.Files.createTempDirectory(s"events_$vintage").toString
+    val dir = tempDir(s"events_$vintage").toString
     spark.range(1)
       .select(
         col("id").as("event_id"),
@@ -77,7 +77,7 @@ class EventsVintageSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("readStream starts on an empty landing directory via fallback schema") {
-    val empty = java.nio.file.Files.createTempDirectory("events_empty").toString
+    val empty = tempDir("events_empty").toString
     val stream = EventStream.readStream(spark, empty)
     assert(stream.isStreaming)
     assert(stream.schema("ts").dataType == TimestampType)

@@ -20,7 +20,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val indexDir = {
-    val d0 = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val d0 = tempDir("ivf_index").toString
     SimilarityOps.buildIvfIndex(spark, dir, d0)
     d0
   }
@@ -81,7 +81,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
   test("incremental append: new vectors become searchable in place") {
     // own index dir — the shared fixture must stay immutable for the
     // other tests regardless of execution order
-    val d2 = java.nio.file.Files.createTempDirectory("ivf_append").toString
+    val d2 = tempDir("ivf_append").toString
     SimilarityOps.buildIvfIndex(spark, dir, d2)
     val before = spark.read.parquet(s"$d2/lists").count()
 
@@ -143,13 +143,13 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming index maintenance: streamed vectors become searchable") {
     import graft.streaming.EmbeddingStream
-    val d3 = java.nio.file.Files.createTempDirectory("ivf_stream").toString
+    val d3 = tempDir("ivf_stream").toString
     SimilarityOps.buildIvfIndex(spark, dir, d3)
     val before = spark.read.parquet(s"$d3/lists").count()
 
     // stage one arrival file: exact copies of two corpus vectors, fresh ids
-    val staged = java.nio.file.Files.createTempDirectory("emb_stream")
-    val scratch = java.nio.file.Files.createTempDirectory("emb_scratch")
+    val staged = tempDir("emb_stream")
+    val scratch = tempDir("emb_scratch")
     Tables.embeddings(spark, dir)
       .filter(col("vec_id").isin(400, 450))
       .select((col("vec_id") + 200000).as("vec_id"), col("embedding"),
@@ -163,7 +163,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
     }
     java.nio.file.Files.copy(partFile, staged.resolve("batch0.parquet"))
 
-    val ckpt = java.nio.file.Files.createTempDirectory("emb_ckpt").toString
+    val ckpt = tempDir("emb_ckpt").toString
     val query = EmbeddingStream.indexStream(
       EmbeddingStream.readStream(spark, staged.toString), d3, ckpt)
     try query.processAllAvailable() finally query.stop()
@@ -195,7 +195,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("one appendToIvfIndex runs 2 Spark jobs") {
-    val d = java.nio.file.Files.createTempDirectory("ivf_append_jobs").toString
+    val d = tempDir("ivf_append_jobs").toString
     SimilarityOps.buildIvfIndex(spark, dir, d)
     val copies = Tables.embeddings(spark, dir)
       .filter(col("vec_id").isin(100, 200))
@@ -209,7 +209,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
   test("equal-score centroids: assign and probe take the lower c_label") {
     // a hand-made codebook: labels 5 and 3 hold the SAME vector, written
     // higher label first, so only the tiebreak decides between them
-    val d = java.nio.file.Files.createTempDirectory("ivf_tie").toString
+    val d = tempDir("ivf_tie").toString
     val session = spark
     import session.implicits._
     Seq((5, Seq(1.0, 0.0)), (3, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
@@ -235,7 +235,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
     // arrival files: copies of corpus vectors under fresh ids, one file per
     // batch
     def arrival(ids: Seq[Int]): java.nio.file.Path = {
-      val out = java.nio.file.Files.createTempDirectory("emb_arrival")
+      val out = tempDir("emb_arrival")
       Tables.embeddings(spark, dir)
         .filter(col("vec_id").isin(ids: _*))
         .select((col("vec_id") + 300000).as("vec_id"), col("embedding"),
@@ -251,7 +251,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuite {
     val batch1 = arrival(Seq(410, 420))
     val batch2 = arrival(Seq(430, 440))
     def fresh(prefix: String) =
-      java.nio.file.Files.createTempDirectory(prefix)
+      tempDir(prefix)
     def land(landing: java.nio.file.Path, name: String,
         file: java.nio.file.Path): Unit =
       java.nio.file.Files.copy(file, landing.resolve(name))

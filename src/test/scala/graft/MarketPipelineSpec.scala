@@ -117,7 +117,7 @@ class MarketPipelineSpec extends AnyFunSuite with SparkSuite {
       pipeline.run(spark, dir).schema)
     val basket = panel.select("entity_name", "entity_sector", "basket_total",
       "basket_positive_pct", "basket_net").distinct()
-    val path = java.nio.file.Files.createTempDirectory("mkt_wb")
+    val path = tempDir("mkt_wb")
       .resolve("market.xlsx").toString
     Xlsx.saveWorkbook(
       Seq((basket, "Basket", (0, 0)), (panel, "Panel", (0, 0))), path)

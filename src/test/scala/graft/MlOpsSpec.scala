@@ -15,7 +15,7 @@ class MlOpsSpec extends AnyFunSuite with SparkSuite {
     // shape that makes HashingTF emit a zero vector, which
     // approxSimilarityJoin rejects with 'Must have at least 1 nonzero
     // entry' unless the guard drops it first
-    val out = java.nio.file.Files.createTempDirectory("ml_empty").toString
+    val out = tempDir("ml_empty").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val firstId = docs.orderBy("doc_id").select("doc_id").head().getLong(0)
     docs.withColumn("text",
@@ -29,7 +29,7 @@ class MlOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("q_ml_kmeans_ivf clamps k to the corpus size on tiny tables") {
     // 5 vectors: the old max-outside clamp asked KMeans for k=10 > n
-    val out = java.nio.file.Files.createTempDirectory("ml_tiny").toString
+    val out = tempDir("ml_tiny").toString
     spark.read.parquet(s"$dir/embeddings.parquet")
       .orderBy("vec_id").limit(5)
       .write.parquet(s"$out/embeddings.parquet")

@@ -110,7 +110,7 @@ class NarrativePipelineSpec extends AnyFunSuite with SparkSuite {
       .distinct()
       .orderBy(col("Date"), col("Headline"), col("Label"))
       .limit(300)
-    val path = java.nio.file.Files.createTempDirectory("narr_wb")
+    val path = tempDir("narr_wb")
       .resolve("mining.xlsx").toString
     Xlsx.saveWorkbook(Seq((input, "Results", (0, 0))), path)
     val back = Xlsx.readWorkbook(spark, path, sourceType = Some("News Media"))

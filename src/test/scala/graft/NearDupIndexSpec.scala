@@ -39,7 +39,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("conf-directed zone: durable location, reused across memo loss") {
-    val base = java.nio.file.Files.createTempDirectory("ndix").toString
+    val base = tempDir("ndix").toString
     withIndexDir(base) {
       SimilarityOps.resetNearDupIndexMemo()
       val zone = SimilarityOps.nearDupIndexFor(spark, dir).get
@@ -59,11 +59,11 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("regenerated corpus changes the fingerprint and the zone") {
-    val corpus = java.nio.file.Files.createTempDirectory("ndcorp").toString
+    val corpus = tempDir("ndcorp").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     emb.write.parquet(s"$corpus/embeddings.parquet")
     val fp1 = SimilarityOps.corpusFingerprint(spark, corpus)
-    val base = java.nio.file.Files.createTempDirectory("ndix2").toString
+    val base = tempDir("ndix2").toString
     withIndexDir(base) {
       SimilarityOps.resetNearDupIndexMemo()
       val zone1 = SimilarityOps.nearDupIndexFor(spark, corpus).get
@@ -80,7 +80,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a torn (uncommitted) zone is rebuilt, not trusted") {
-    val base = java.nio.file.Files.createTempDirectory("ndix3").toString
+    val base = tempDir("ndix3").toString
     val fp = SimilarityOps.corpusFingerprint(spark, dir)
     val asg = java.nio.file.Paths.get(s"$base/nd_$fp/assignments")
     java.nio.file.Files.createDirectories(asg)
@@ -98,10 +98,10 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("pruner deletes only PROVABLY stale zones and crashed builds") {
-    val corpus = java.nio.file.Files.createTempDirectory("ndcorp2").toString
+    val corpus = tempDir("ndcorp2").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     emb.write.parquet(s"$corpus/embeddings.parquet")
-    val base = java.nio.file.Files.createTempDirectory("ndix4").toString
+    val base = tempDir("ndix4").toString
     withIndexDir(base) {
       SimilarityOps.resetNearDupIndexMemo()
       // zone 1: current corpus → must be KEPT
@@ -111,7 +111,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
       emb.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
       // zone 3: corpus deleted outright → deleted_corpus_gone
       val corpus3 =
-        java.nio.file.Files.createTempDirectory("ndcorp3").toString
+        tempDir("ndcorp3").toString
       emb.write.parquet(s"$corpus3/embeddings.parquet")
       SimilarityOps.resetNearDupIndexMemo()
       SimilarityOps.nearDupIndexFor(spark, corpus3)
@@ -160,7 +160,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
     // temp build would be silently near-empty on a real cluster. The
     // caller computes the pairs directly instead (oracle pins the routes
     // equal).
-    val base = java.nio.file.Files.createTempDirectory("ndix5").toString
+    val base = tempDir("ndix5").toString
     withIndexDir(base) {
       SimilarityOps.resetNearDupIndexMemo()
       assert(SimilarityOps.resolveNearDupIndex(spark, dir, "absent").isEmpty)
@@ -180,7 +180,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
     SimilarityOps.resetNearDupIndexMemo()
     // conf unset: the zone sits under the per-JVM temp base
     val temp = SimilarityOps.nearDupIndexFor(spark, dir).get
-    val base = java.nio.file.Files.createTempDirectory("ndix8").toString
+    val base = tempDir("ndix8").toString
     withIndexDir(base) {
       val durable = SimilarityOps.nearDupIndexFor(spark, dir).get
       assert(durable.startsWith(base) && durable != temp,
@@ -210,7 +210,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
     // INTO dst and returns true (HDFS + local FS) — so a loser cannot
     // detect the race from the return value. The resolver must re-probe:
     // delete its own deposited build and serve the winner's zone intact.
-    val base = java.nio.file.Files.createTempDirectory("ndix6").toString
+    val base = tempDir("ndix6").toString
     val fp = SimilarityOps.corpusFingerprint(spark, dir)
     val zoneDir = java.nio.file.Paths.get(s"$base/nd_$fp")
     withIndexDir(base) {
@@ -246,7 +246,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
     // a loser that crashed between its deposited-inside rename and its own
     // cleanup leaves .build_nd_* debris INSIDE the committed zone — the one
     // place the top-level scan can't see
-    val base = java.nio.file.Files.createTempDirectory("ndix7").toString
+    val base = tempDir("ndix7").toString
     val zone = java.nio.file.Paths.get(s"$base/nd_blind2")
     java.nio.file.Files.createDirectories(zone.resolve("assignments"))
     java.nio.file.Files.writeString(
@@ -279,7 +279,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
   private def withCopyFs[T](f: String => T): T = {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.copyfs.impl", "graft.CopyRenameFileSystem")
-    val localBase = java.nio.file.Files.createTempDirectory("ndix_os").toString
+    val localBase = tempDir("ndix_os").toString
     CopyRenameFileSystem.reset()
     try f(localBase) finally CopyRenameFileSystem.reset()
   }

@@ -30,7 +30,7 @@ class ParquetReadSpec extends AnyFunSuite with SparkSuite {
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def plain(path: String): DataFrame = spark.read.parquet(path)
 

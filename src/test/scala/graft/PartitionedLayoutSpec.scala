@@ -17,7 +17,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def parquetFiles(root: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
@@ -69,7 +69,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkSuite {
   test("streaming landPartitioned writes a pruned-readable partitioned zone") {
     import graft.streaming.EventStream
     // stage the events file as a stream source
-    val staged = java.nio.file.Files.createTempDirectory("events_land_src")
+    val staged = tempDir("events_land_src")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))

@@ -177,7 +177,7 @@ class ReportSinkSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("entity report: writes to disk") {
-    val p = java.nio.file.Files.createTempDirectory("report").resolve("r.html")
+    val p = tempDir("report").resolve("r.html")
     ReportSink.writeEntityReport(fixture, "t", definitions, "s", scoreRows,
       summaries, p.toString)
     val html = java.nio.file.Files.readString(p)

@@ -43,7 +43,7 @@ class SessionSpec extends AnyFunSuite with SparkSuite {
     try {
       Session(4, Map(PlanProbe.PolicyKey -> "reliable"))
       assert(sc.getCheckpointDir.nonEmpty)
-      sc.setCheckpointDir(Files.createTempDirectory("graft_ck_preset").toString)
+      sc.setCheckpointDir(tempDir("graft_ck_preset").toString)
       val preset = sc.getCheckpointDir
       Session(4, Map(PlanProbe.PolicyKey -> "reliable"))
       assert(sc.getCheckpointDir == preset)

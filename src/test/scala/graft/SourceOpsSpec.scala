@@ -10,7 +10,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("csv sheet sink/source round-trips a result table") {
-    val tmp = java.nio.file.Files.createTempDirectory("sheets").toString
+    val tmp = tempDir("sheets").toString
     val basket = SparkEntry.queries("q_basket")(spark, dir)
     SourceOps.writeSheet(basket, tmp, "basket")
     val back = SourceOps.readSheet(spark, tmp, "basket")
@@ -27,7 +27,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
     // a text cell containing a newline is ONE record under the CSV
     // grammar; a physical-line split would shear it into two malformed
     // rows (and shift the workbook reader's banner/header offsets)
-    val tmp = java.nio.file.Files.createTempDirectory("sheets_nl").toString
+    val tmp = tempDir("sheets_nl").toString
     val df = Seq(("a", "Revenue fell;\nmargins too", 1L),
       ("b", "plain", 2L)).toDF("K", "Note", "N")
     SourceOps.writeSheet(df, tmp, "notes")
@@ -49,7 +49,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
   test("workbook sheet reader applies header=1 + Unnamed-drop quirks") {
     // layout a real result sheet arrives in (tool.py:10-26): banner line,
     // header with a spreadsheet index column, then data
-    val tmp = java.nio.file.Files.createTempDirectory("wb")
+    val tmp = tempDir("wb")
     val f = tmp.resolve("results.csv")
     java.nio.file.Files.writeString(f,
       """Narrative Mining Results - Q3,,,,
@@ -66,7 +66,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("stage checkpoint builds once, then reads back") {
-    val tmp = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val tmp = tempDir("ckpt").toString
     var builds = 0
     def build = {
       builds += 1
@@ -80,7 +80,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("stage checkpoint distrusts an uncommitted (torn) write") {
     // simulate a rebuild killed mid-write: part-files on disk, no _SUCCESS
-    val tmp = java.nio.file.Files.createTempDirectory("ckpt_torn")
+    val tmp = tempDir("ckpt_torn")
     val stage = tmp.resolve("labels")
     java.nio.file.Files.createDirectories(stage)
     java.nio.file.Files.writeString(
@@ -106,7 +106,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
     hconf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs",
       false)
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("ckpt_nomark")
+      val tmp = tempDir("ckpt_nomark")
       var builds = 0
       def build = {
         builds += 1
@@ -131,7 +131,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
     // job-level signal there.
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val tmp = java.nio.file.Files.createTempDirectory("nomark")
+    val tmp = tempDir("nomark")
     val stage = tmp.resolve("labels")
     java.nio.file.Files.createDirectories(stage)
     def p(s: java.nio.file.Path) = new org.apache.hadoop.fs.Path(s.toString)
@@ -154,7 +154,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("workbook sheet reader parses quoted headers with commas") {
-    val tmp = java.nio.file.Files.createTempDirectory("wb_q")
+    val tmp = tempDir("wb_q")
     val f = tmp.resolve("results.csv")
     java.nio.file.Files.writeString(f,
       """Banner,,,
@@ -171,7 +171,7 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("compactPartitions preserves zero-padded string partition values") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("zone_pad").toString
+    val zone = tempDir("zone_pad").toString
     val df = Seq(("00123", 1L), ("00123", 2L), ("7", 3L))
       .toDF("source", "n")
     SourceOps.writePartitioned(df, zone, Seq("source"))
@@ -189,5 +189,19 @@ class SourceOpsSpec extends AnyFunSuite with SparkSuite {
     val back = spark.read.parquet(zone)
     assert(back.count() == 4)
     assert(back.filter(col("source") === "00123").count() == 3)
+  }
+
+  test("repoFile: the working directory first, then the repo root, else the working directory") {
+    val repo = java.nio.file.Paths.get("").toAbsolutePath
+    val elsewhere = tempDir("no_fixtures")
+    assert(SourceOps.repoFile("fixtures", elsewhere, Some(repo)) ==
+      repo.resolve("fixtures").toString)
+    assert(SourceOps.repoFile("fixtures", elsewhere) ==
+      repo.resolve("fixtures").toString, "the code source finds the repo root")
+    java.nio.file.Files.createDirectory(elsewhere.resolve("fixtures"))
+    assert(SourceOps.repoFile("fixtures", elsewhere, Some(repo)) ==
+      elsewhere.resolve("fixtures").toString)
+    assert(SourceOps.repoFile("absent", elsewhere, Some(repo)) ==
+      elsewhere.resolve("absent").toString)
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -17,33 +17,25 @@ trait SparkSuite extends BeforeAndAfterAll { self: Suite =>
   protected lazy val spark: SparkSession =
     Session(cpus = 4, overrides = sparkOverrides)
 
-  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
 
-  /** Spark jobs started on this thread while `body` runs. Listener events
-    * arrive in post order, so once a marker job run after `body` has been
-    * seen, every job `body` started has been seen too. */
-  protected def jobsDuring(body: => Unit): Int = {
-    val phaseKey = "graft.test.phase"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty(phaseKey))
-          .getOrElse("none"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phaseKey, "body")
-      try body finally sc.setLocalProperty(phaseKey, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("marker"), "marker job never reached the listener")
-      seen.asScala.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(phaseKey, null)
-      sc.removeSparkListener(listener)
-    }
+  /** A fresh temp directory, deleted with everything in it after the spec. */
+  protected def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
   }
+
+  override def afterAll(): Unit =
+    try spark.stop()
+    finally try tempDirs.asScala.foreach(deleteTree) finally super.afterAll()
+
+  private def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val paths = Files.walk(root)
+    try paths.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+    finally paths.close()
+  }
+
+  /** Spark jobs started on this thread while `body` runs. */
+  protected def jobsDuring(body: => Unit): Int = WorkCount.during(spark)(body)._2.jobs
 }

@@ -11,10 +11,10 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   override protected def sparkOverrides = Map("spark.sql.warehouse.dir" ->
-    java.nio.file.Files.createTempDirectory("graft_stream_wh").toString)
+    tempDir("graft_stream_wh").toString)
 
   test("streaming corpus gate equals the batch projection once drained") {
-    val staged = java.nio.file.Files.createTempDirectory("docs_stream")
+    val staged = tempDir("docs_stream")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
@@ -45,7 +45,7 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
     // watermark horizon — the regime where stream ≡ batch holds exactly
     // (past-horizon duplicates are deliberately kept by the stream gate;
     // see dedupedDocuments' scaladoc)
-    val staged = java.nio.file.Files.createTempDirectory("docs_dedup_stream")
+    val staged = tempDir("docs_dedup_stream")
     for (name <- Seq("delivery_a.parquet", "delivery_b.parquet"))
       java.nio.file.Files.createSymbolicLink(
         staged.resolve(name),
@@ -79,7 +79,7 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming corpus health panel equals the batch windowed aggregate") {
-    val staged = java.nio.file.Files.createTempDirectory("docs_stats_stream")
+    val staged = tempDir("docs_stats_stream")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
@@ -121,7 +121,7 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
   test("streaming contamination gate equals the batch decontamination join") {
     val grams = CorpusStream.benchGrams(spark)
     assert(grams.nonEmpty, "eval-set fixture must yield 13-grams")
-    val staged = java.nio.file.Files.createTempDirectory("docs_decon_stream")
+    val staged = tempDir("docs_decon_stream")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
@@ -187,10 +187,10 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
       (100004L, "zq xv qj wk vx kz jq zx nine ten eleven twelve", "en", "novel", 1L),
       (100005L, "entirely unrelated fresh content nothing shared here at all", "en", "novel", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val staged = java.nio.file.Files.createTempDirectory("neardup_stream")
+    val staged = tempDir("neardup_stream")
     // land as a single flat file (the file stream lists plain files, like
     // the symlinked fixtures above): write to a scratch dir, move the part
-    val scratch = java.nio.file.Files.createTempDirectory("neardup_scratch")
+    val scratch = tempDir("neardup_scratch")
     arrivals.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
     val partFile = {
       import scala.jdk.CollectionConverters._
@@ -251,8 +251,8 @@ class StreamingCorpusSpec extends AnyFunSuite with SparkSuite {
       // arrivals: the whole corpus re-fetched under fresh ids, so every
       // doc must pair with its original and the candidate set can't be
       // vacuously empty
-      val staged = java.nio.file.Files.createTempDirectory("neardup_bucketed")
-      val scratch = java.nio.file.Files.createTempDirectory("neardup_b_scratch")
+      val staged = tempDir("neardup_bucketed")
+      val scratch = tempDir("neardup_b_scratch")
       graft.model.Tables.documents(spark, dir)
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .coalesce(1).write.mode("overwrite").parquet(scratch.toString)

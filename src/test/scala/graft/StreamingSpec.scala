@@ -11,7 +11,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming weekly counts equal the batch twin once drained") {
     // file stream sources require a directory; stage the single events file
-    val staged = java.nio.file.Files.createTempDirectory("events_stream")
+    val staged = tempDir("events_stream")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -40,7 +40,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("stream-static enrichment equals the batch join once drained") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("events_enrich")
+    val staged = tempDir("events_enrich")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -75,7 +75,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("streaming dedup collapses a re-delivered file to the batch distinct set") {
     // stage the SAME events file twice — an at-least-once upstream
     // re-delivering a whole file is the classic ingestion-dedup case
-    val staged = java.nio.file.Files.createTempDirectory("events_dup")
+    val staged = tempDir("events_dup")
     java.nio.file.Files.createSymbolicLink(
       staged.resolve("events_a.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))

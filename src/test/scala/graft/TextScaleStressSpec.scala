@@ -13,7 +13,7 @@ class TextScaleStressSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val out = {
-    val o = java.nio.file.Files.createTempDirectory("ts_d").toString
+    val o = tempDir("ts_d").toString
     Blowup.corpus(spark, dir, 3, o)
     o
   }

@@ -13,7 +13,7 @@ class XlsxSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def tmpXlsx(): String =
-    java.nio.file.Files.createTempDirectory("xlsx").resolve("wb.xlsx").toString
+    tempDir("xlsx").resolve("wb.xlsx").toString
 
   test("A1 reference helpers are inverse bijections across the grid") {
     assert(Xlsx.colLetters(0) == "A" && Xlsx.colLetters(25) == "Z" &&
@@ -209,7 +209,7 @@ class XlsxSpec extends AnyFunSuite with SparkSuite {
 
   test("Date cells accept Excel numeric day serials (openpyxl shape)") {
     // serial 45292 = 2024-01-01 (days since 1899-12-30)
-    val tmp = java.nio.file.Files.createTempDirectory("xl_serial")
+    val tmp = tempDir("xl_serial")
     val p = tmp.resolve("wb.xlsx").toString
     import spark.implicits._
     // write a workbook, then doctor its sheet XML would be heavy — instead
